@@ -51,21 +51,28 @@ def _overwrite_epoch(spark: SparkSession, df: DataFrame, out_dir: str, epoch_id:
     )
 
 
-def _run_concurrent(*thunks) -> None:
+def _run_concurrent(*thunks) -> list:
     """Submit independent Spark actions concurrently (opt guide §2.6):
     a fold's per-epoch state writes are independent jobs once their
     shared inputs are locally checkpointed, so one write's task tail
     back-fills with the next write's stages instead of each write paying
-    its own full AQE stage-wave latency in sequence."""
+    its own full AQE stage-wave latency in sequence.
+
+    Each thunk runs with a copy of the caller's Spark local properties,
+    so inside foreachBatch its jobs stay in the streaming query's job
+    group (and are cancelled with it). Returns the thunks' results in
+    order; the first failure is re-raised after every thunk has ended."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.sql import SparkSession
+    from pyspark.util import inheritable_thread_target
+
     if len(thunks) == 1:
-        thunks[0]()
-        return
+        return [thunks[0]()]
+    session = SparkSession.active()
     with ThreadPoolExecutor(len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        for f in futures:
-            f.result()
+        futures = [pool.submit(inheritable_thread_target(session)(t)) for t in thunks]
+        return [f.result() for f in futures]
 
 
 def _read_epoch(

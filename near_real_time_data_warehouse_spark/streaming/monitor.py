@@ -62,9 +62,12 @@ class EvictionLedger:
         self.batches: list[dict[str, int]] = []
 
     def record(self, epoch_id: int, loaded: int, evicted: int) -> None:
-        self.batches.append(
-            {"epoch_id": int(epoch_id), "loaded": int(loaded), "evicted": int(evicted)}
-        )
+        """Record one micro-batch. A replayed epoch (foreachBatch is
+        at-least-once) replaces its earlier entry instead of counting
+        twice."""
+        entry = {"epoch_id": int(epoch_id), "loaded": int(loaded), "evicted": int(evicted)}
+        self.batches = [b for b in self.batches if b["epoch_id"] != entry["epoch_id"]]
+        self.batches.append(entry)
 
     @property
     def total_evicted(self) -> int:

@@ -2,12 +2,15 @@
 
 from __future__ import annotations
 
+import os
 from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from near_real_time_data_warehouse_spark import etl
+from near_real_time_data_warehouse_spark.streaming.monitor import EvictionLedger
 from near_real_time_data_warehouse_spark.streaming.pipeline import run_streaming_etl
 
 from .fixtures import write_fixture_csvs
@@ -281,3 +284,192 @@ def test_streaming_eviction_metric_equals_anti_join(
         b = {tuple(str(v) for v in r) for r in star[name].collect()}
         s = {tuple(str(v) for v in r) for r in streamed[name].collect()}
         assert b == s, f"{name}: metered stream diverges from batch"
+
+
+# --- one-pass micro-batch load ----------------------------------------------
+
+DIMS = ("customer_dim", "product_dim", "time_dim")
+WARM_BATCH_JOBS = 11
+KNOWN_KEYS_BATCH_JOBS = 7
+
+
+class _RunIds(StreamingQueryListener):
+    """Records each started query's run id: the job group its micro-batch
+    jobs run under."""
+
+    def __init__(self) -> None:
+        self.run_ids: list[str] = []
+
+    def onQueryStarted(self, event) -> None:  # noqa: ANN001, N802
+        self.run_ids.append(str(event.runId))
+
+    def onQueryProgress(self, event) -> None:  # noqa: ANN001, N802
+        pass
+
+    def onQueryIdle(self, event) -> None:  # noqa: ANN001, N802
+        pass
+
+    def onQueryTerminated(self, event) -> None:  # noqa: ANN001, N802
+        pass
+
+
+def _write_parts(paths, txn_dir: Path, parts: int) -> list[list[str]]:
+    """The fixture's transactions as ``parts`` CSV files; returns their
+    row texts per part (header excluded). Modification times increase by
+    part, so a one-file-per-trigger stream reads part k as epoch k (the
+    file source orders files by modification time)."""
+    import time
+
+    src = Path(paths["transactions"]) / "transactions.csv"
+    header, *rows = src.read_text().splitlines()
+    n = -(-len(rows) // parts)
+    chunks = [rows[k * n:(k + 1) * n] for k in range(parts)]
+    txn_dir.mkdir()
+    now = time.time()
+    for k, chunk in enumerate(chunks):
+        path = txn_dir / f"t{k}.csv"
+        path.write_text("\n".join([header] + chunk) + "\n")
+        os.utime(path, (now - parts + k, now - parts + k))
+    return chunks
+
+
+def _dim_files(wh: str) -> dict[str, list[str]]:
+    return {d: sorted(os.listdir(f"{wh}/{d}")) for d in DIMS}
+
+
+def _star_sets(spark, wh: str) -> dict[str, set]:
+    star = etl.read_star(spark, wh)
+    return {t: {tuple(str(v) for v in r) for r in star[t].collect()} for t in etl.STAR_TABLES}
+
+
+def test_replayed_batch_appends_no_dimension_file(spark, paths, tmp_path_factory):
+    """A batch whose keys are all in the star already (here a replayed
+    epoch) writes no dimension file; only the fact epoch is rewritten."""
+    wh = str(tmp_path_factory.mktemp("warehouse_known_keys"))
+    cust = etl.read_customer_master(spark, str(paths["customer"]))
+    prod = etl.read_product_master(spark, str(paths["product"]))
+    enriched = etl.enrich(etl.read_transactions(spark, str(paths["transactions"])), cust, prod)
+
+    first = etl.load_star_batch(spark, enriched, cust, prod, wh, epoch_id=0)
+    files = _dim_files(wh)
+    assert all(files.values())
+    star = _star_sets(spark, wh)
+    replay = etl.load_star_batch(spark, enriched, cust, prod, wh, epoch_id=0)
+    assert _dim_files(wh) == files
+    assert _star_sets(spark, wh) == star
+    assert replay == first and first["evicted"] == 0
+
+
+def test_warm_metered_microbatch_job_count(spark, paths, tmp_path_factory):
+    """Pins the Spark job count of a warm metered micro-batch, taken by
+    the query's job group (its run id). Before the one-pass loader a warm
+    batch ran 23 jobs: a separate count aggregate, a schema-inference
+    read and an append per dimension, empty or not. A batch of known keys
+    adds no dimension file and runs fewer jobs still."""
+    base = tmp_path_factory.mktemp("warm_jobs")
+    txn = base / "txns"
+    chunks = _write_parts(paths, txn, 2)
+    for f in txn.iterdir():  # landed one at a time below
+        f.rename(base / f.name)
+    wh, ckpt = str(base / "wh"), str(base / "ckpt")
+    sc = spark.sparkContext
+    ledger = EvictionLedger()
+    listener = _RunIds()
+    spark.streams.addListener(listener)
+
+    def call() -> int:
+        run_streaming_etl(
+            spark, str(txn), str(paths["customer"]), str(paths["product"]), wh, ckpt,
+            metrics=ledger,
+        )
+        # Job events reach the status tracker through the listener bus.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(listener.run_ids[-1]))
+
+    try:
+        (base / "t0.csv").rename(txn / "t0.csv")
+        call()  # cold
+        (base / "t1.csv").rename(txn / "t1.csv")
+        warm = call()
+        files = _dim_files(wh)
+        header = (txn / "t0.csv").read_text().splitlines()[0]
+        (txn / "t2.csv").write_text("\n".join([header] + chunks[0]) + "\n")
+        known = call()  # every key of this batch is in the star already
+    finally:
+        spark.streams.removeListener(listener)
+    assert _dim_files(wh) == files
+    assert [b["epoch_id"] for b in ledger.batches] == [0, 1, 2]
+    assert ledger.batches[2]["loaded"] == ledger.batches[0]["loaded"]
+    assert (warm, known) == (WARM_BATCH_JOBS, KNOWN_KEYS_BATCH_JOBS)
+
+
+@pytest.fixture(scope="module")
+def clean_three_epochs(spark, paths, tmp_path_factory):
+    """A clean metered run over three one-file epochs: its star and
+    ledger are what a crash-and-rerun must reproduce."""
+    base = tmp_path_factory.mktemp("clean_epochs")
+    _write_parts(paths, base / "txns", 3)
+    wh = str(base / "wh")
+    ledger = EvictionLedger()
+    run_streaming_etl(
+        spark, str(base / "txns"), str(paths["customer"]), str(paths["product"]), wh,
+        str(base / "ckpt"), max_files_per_trigger=1, metrics=ledger,
+    )
+    assert len(ledger.batches) == 3
+    return _star_sets(spark, wh), ledger.batches
+
+
+@pytest.mark.parametrize("failing", ["salefact", "customer_dim"])
+def test_crash_in_concurrent_write_then_rerun_equals_clean(
+    spark, paths, tmp_path_factory, monkeypatch, clean_three_epochs, failing
+):
+    """One of the concurrent star writes of epoch 1 raises. The failure
+    reaches the caller, epoch 1 is not committed, and a rerun on the same
+    checkpoint leaves the star and the ledger equal to a clean run's."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from near_real_time_data_warehouse_spark.streaming import pipeline
+
+    base = tmp_path_factory.mktemp(f"crash_{failing}")
+    _write_parts(paths, base / "txns", 3)
+    wh, ckpt = str(base / "wh"), str(base / "ckpt")
+    args = (str(base / "txns"), str(paths["customer"]), str(paths["product"]), wh, ckpt)
+    target = f"{wh}/salefact/epoch=1" if failing == "salefact" else f"{wh}/{failing}"
+    state = {"epoch": None, "fired": False}
+    load, parquet = pipeline.load_star_batch, DataFrameWriter.parquet
+
+    def load_tracking_epoch(*a, **kw):  # noqa: ANN002, ANN003, ANN202
+        state["epoch"] = kw["epoch_id"]
+        return load(*a, **kw)
+
+    def parquet_failing_once(self, path, *a, **kw):  # noqa: ANN001, ANN002, ANN003, ANN202
+        if state["epoch"] == 1 and path == target and not state["fired"]:
+            state["fired"] = True
+            raise RuntimeError(f"injected crash writing {failing}")
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(pipeline, "load_star_batch", load_tracking_epoch)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_failing_once)
+    ledger = EvictionLedger()
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run_streaming_etl(spark, *args, max_files_per_trigger=1, metrics=ledger)
+    assert state["fired"]
+    assert os.path.exists(f"{ckpt}/commits/0")
+    assert not os.path.exists(f"{ckpt}/commits/1")
+
+    run_streaming_etl(spark, *args, max_files_per_trigger=1, metrics=ledger)
+    clean_star, clean_batches = clean_three_epochs
+    assert _star_sets(spark, wh) == clean_star
+    assert ledger.batches == clean_batches
+
+
+def test_ledger_counts_a_replayed_epoch_once():
+    """foreachBatch is at-least-once: an epoch replayed after its record
+    but before its checkpoint commit replaces its entry."""
+    ledger = EvictionLedger()
+    ledger.record(0, loaded=5, evicted=1)
+    ledger.record(1, loaded=7, evicted=2)
+    ledger.record(1, loaded=7, evicted=2)  # replay
+    assert [b["epoch_id"] for b in ledger.batches] == [0, 1]
+    assert (ledger.total_loaded, ledger.total_evicted) == (12, 3)
