@@ -5,9 +5,11 @@ declarative Spark dataflow:
 
 - The MESHJOIN-style hybrid join (hybrid_join.py:168-354) — a hand-rolled
   hash-table/FIFO-queue machine that enriches each streamed sale with
-  customer and product master rows — becomes two broadcast joins:
-  customer leg INNER (unmatched tuples are evicted, :229-231), product
-  leg LEFT (partial tuples kept, :285-303).
+  customer and product master rows — becomes one flagged join
+  (``enrich``) of two broadcast legs: the customer leg flags each row
+  ``cust_matched`` and the loader loads only matched rows (unmatched
+  tuples are evicted, :229-231, and counted); the product leg is LEFT
+  (partial tuples kept, :285-303).
 - The row-at-a-time MySQL loader (hybrid_join.py:356-477) becomes
   set-oriented Parquet writes: dimension upsert = append of the keys not
   yet in the star (first-writer-wins, matching ``INSERT … ON DUPLICATE
@@ -27,7 +29,6 @@ has new keys — a batch with no new keys writes no dimension file.
 
 from __future__ import annotations
 
-import os
 from functools import partial, reduce
 
 import pyarrow as pa
@@ -46,7 +47,8 @@ from .schemas import (
     TIME_DIM_SCHEMA,
     TRANSACTION_SCHEMA,
 )
-from .streaming.dedup_stream import _run_concurrent
+from .sources.maintenance import path_exists
+from .streaming.fold import run_concurrent
 
 STAR_TABLES = ("customer_dim", "product_dim", "time_dim", "salefact")
 STAR_SCHEMAS = (CUSTOMER_DIM_SCHEMA, PRODUCT_DIM_SCHEMA, TIME_DIM_SCHEMA, SALE_FACT_SCHEMA)
@@ -108,48 +110,14 @@ def read_transactions(
 # --- enrichment (J1 + J2 + P7-P9) -----------------------------------------
 
 def enrich(txns: DataFrame, customer_dim: DataFrame, product_dim: DataFrame) -> DataFrame:
-    """The hybrid join, Spark-first. Customer leg INNER (J1 eviction
-    semantics), product leg LEFT (J2 keeps partial tuples); both sides
-    broadcast — the stream never shuffles. Adds the derived measure and
-    the parsed event date."""
-    with_date = txns.filter(F.col("Customer_ID").isNotNull()).withColumn(
-        "full_date", F.to_date("date", "M/d/yyyy")
-    )
-    joined = (
-        with_date.join(
-            F.broadcast(customer_dim.select(F.col("customer_id").alias("Customer_ID"))),
-            "Customer_ID",
-            "inner",
-        )
-        .join(
-            F.broadcast(product_dim.select(F.col("product_id").alias("Product_ID"), "price")),
-            "Product_ID",
-            "left",
-        )
-    )
-    return joined.select(
-        F.col("orderID").alias("order_id"),
-        F.col("Customer_ID").alias("customer_id"),
-        F.col("Product_ID").alias("product_id"),
-        "full_date",
-        F.col("quantity"),
-        F.round(F.col("quantity") * F.col("price"), 2)
-        .cast("decimal(12,2)")
-        .alias("purchase_amount"),
-    )
-
-
-def enrich_flagged(
-    txns: DataFrame, customer_dim: DataFrame, product_dim: DataFrame
-) -> DataFrame:
-    """``enrich`` with the customer leg LEFT plus a ``cust_matched``
-    flag instead of the bare inner join: filtering the flag yields rows
-    IDENTICAL to ``enrich`` (J1 eviction semantics), but the
-    dropped-tuple count becomes observable from the same joined batch —
-    the reference PRINTS its evicted unmatched-key counts
-    (hybrid_join.py:208,236,354) while a bare inner join swallows them.
-    One stream-static broadcast join serves both the load and the
-    metric; no second pass over the batch."""
+    """The hybrid join, Spark-first, as one flagged join. The customer
+    leg is LEFT with a ``cust_matched`` flag: its matched rows are the
+    inner join's (J1 eviction semantics), and the dropped-tuple count
+    stays observable from the same joined batch — the reference PRINTS
+    its evicted unmatched-key counts (hybrid_join.py:208,236,354) while
+    a bare inner join swallows them. The product leg is LEFT (J2 keeps
+    partial tuples); both sides broadcast — the stream never shuffles.
+    Adds the derived measure and the parsed event date."""
     with_date = txns.filter(F.col("Customer_ID").isNotNull()).withColumn(
         "full_date", F.to_date("date", "M/d/yyyy")
     )
@@ -218,7 +186,7 @@ def _known_keys(
     frames = [product_master.select(F.col("product_id").alias(_MASTER_PRODUCT))]
     for dim, key, schema in _DIMS:
         path = f"{warehouse_dir}/{dim}"
-        if os.path.exists(path):
+        if path_exists(spark, path):
             frames.append(spark.read.schema(schema).parquet(path).select(key))
     known = {c: set() for c in (_MASTER_PRODUCT, *(key for _, key, _ in _DIMS))}
     for row in reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames).collect():
@@ -263,8 +231,8 @@ def load_star_batch(
     the driver; they are bounded by the master sizes, which the scale
     contract already requires to be broadcastable.
 
-    A batch from ``enrich_flagged`` (with ``cust_matched``) loads only its
-    matched rows; the others are counted as evicted. Returns
+    The batch comes from ``enrich``: only its ``cust_matched`` rows load;
+    the others are counted as evicted. Returns
     ``{"loaded": n, "evicted": m}``.
 
     ``epoch_id`` (streaming): the fact append lands under
@@ -273,8 +241,7 @@ def load_star_batch(
     rewrites the same directory instead of duplicating rows — this plus
     the idempotent dim upserts makes the streaming load exactly-once end
     to end. Batch loads (epoch_id=None) keep the plain append layout."""
-    os.makedirs(warehouse_dir, exist_ok=True)
-    matched = F.col("cust_matched") if "cust_matched" in enriched.columns else F.lit(True)
+    matched = F.col("cust_matched")
     batch = enriched.persist()
     try:
         keys_and_counts = batch.agg(
@@ -285,7 +252,7 @@ def load_star_batch(
             F.count_if(matched).alias("loaded"),
             F.count_if(~matched).alias("evicted"),
         )
-        seen, known = _run_concurrent(
+        seen, known = run_concurrent(
             keys_and_counts.first, partial(_known_keys, spark, warehouse_dir, product_dim)
         )
 
@@ -328,7 +295,7 @@ def load_star_batch(
                     *[attrs[c.name].alias(c.name) for c in TIME_DIM_SCHEMA]
                 )
             writes.append(partial(rows.write.mode("append").parquet, f"{warehouse_dir}/{dim}"))
-        _run_concurrent(*writes)
+        run_concurrent(*writes)
     finally:
         batch.unpersist()
     return {"loaded": seen["loaded"], "evicted": seen["evicted"]}

@@ -50,12 +50,6 @@ from .quality import EXPECTATIONS_SQL
 from .similarity import _emb, _ivf_lists_sql, _pca_sql
 from .text import _bm25_split_sql, _docs, _dsir_split_sql
 
-_BM25_SCORE_SCHEMA = (
-    "query_id long, rank long, doc_id long, score_scaled long, "
-    "score double, n_hit_terms long"
-)
-_PCA_SCORE_SCHEMA = "vec_id long, label long, proj_num long, proj double"
-
 # Replay-state scratch on the fastest local storage available (same
 # rationale as the session's spark.local.dir): the two-epoch playback
 # writes and re-reads each fold's parquet state within one entry, so
@@ -87,7 +81,7 @@ def stream_bm25_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the fold's per-epoch state is bounded (per-term df
     partials + one totals row); scoring is the broadcast-join screen of
     text_bm25_incremental, cost ∝ batch after the standing stats pass."""
-    from ..streaming.bm25_stream import merge_bm25_batch
+    from ..streaming.bm25_stream import SCORE_SCHEMA, merge_bm25_batch
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     state = _fresh_state("bm25")
@@ -98,7 +92,7 @@ def stream_bm25_router(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, docs.filter(F.col("doc_id") % 2 == 1), state, epoch_id=1
     )
     if out is None:
-        return spark.createDataFrame([], _BM25_SCORE_SCHEMA)
+        return spark.createDataFrame([], SCORE_SCHEMA)
     return out
 
 
@@ -114,7 +108,7 @@ def stream_pca_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gram partial (one Arrow matmul per batch); the eigen-solve is the
     32 KB driver reduction; the projection is one scan-side pass over
     the batch."""
-    from ..streaming.pca_stream import merge_pca_batch
+    from ..streaming.pca_stream import SCORE_SCHEMA, merge_pca_batch
 
     e = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
     state = _fresh_state("pca")
@@ -123,7 +117,7 @@ def stream_pca_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, e.filter(F.col("vec_id") % 2 == 1), state, epoch_id=1
     )
     if out is None:
-        return spark.createDataFrame([], _PCA_SCORE_SCHEMA)
+        return spark.createDataFrame([], SCORE_SCHEMA)
     return out
 
 
@@ -137,7 +131,7 @@ def stream_dsir_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     table + one row per language per epoch; batch scoring joins the
     batch's hashed features against the broadcast bucket stats,
     cost ∝ batch."""
-    from ..streaming.dsir_stream import merge_dsir_batch
+    from ..streaming.dsir_stream import SCORE_SCHEMA, merge_dsir_batch
 
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "text")
     state = _fresh_state("dsir")
@@ -148,9 +142,7 @@ def stream_dsir_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, docs.filter(F.col("doc_id") % 2 == 1), state, epoch_id=1
     )
     if out is None:
-        return spark.createDataFrame(
-            [], "doc_id long, n_features long, score_bits long"
-        )
+        return spark.createDataFrame([], SCORE_SCHEMA)
     return out
 
 

@@ -40,6 +40,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..streaming.fold import drain, parquet_stream
+
 
 def _fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm  # noqa: SLF001
@@ -614,26 +616,10 @@ def run_streaming_snapshot_sink(
     micro-batch MERGEs as one atomic version stamped with its epoch, so
     a replayed epoch is detected and skipped — the checkpointed-offsets
     + idempotent-sink discipline of etl.py, on the manifest layer."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
+    drain(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_snapshot(
+            s, table_dir, batch, key, when_matched=when_matched, epoch_id=epoch_id
+        ),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_snapshot(
-            batch_df.sparkSession,
-            table_dir,
-            batch_df,
-            key,
-            when_matched=when_matched,
-            epoch_id=epoch_id,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -7,7 +7,7 @@ it. This is text_bm25_incremental's production mode made continuous: no
 batch ever re-reads standing text, and the state is two bounded-per-
 epoch tables (per-term df partials + one (n_docs, t_tokens) row).
 
-Replay safety (the dedup_stream.py exactly-once discipline): df/total
+Replay safety (the fold.py exactly-once discipline): df/total
 partials and batch scores all land in ``_epoch=<id>`` partitions with
 dynamic partition overwrite, and the standing side always excludes the
 CURRENT epoch's partitions — so re-delivering an epoch recomputes scores
@@ -26,9 +26,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import bm25_batch_tfdl, bm25_score_with_stats
-from .dedup_stream import _overwrite_epoch, _read_epoch, _run_concurrent
+from .fold import (
+    drain,
+    overwrite_partitions,
+    parquet_stream,
+    read_epoch,
+    read_state,
+    run_concurrent,
+)
 
-_SCORE_SCHEMA = (
+SCORE_SCHEMA = (
     "query_id long, rank long, doc_id long, score_scaled long, "
     "score double, n_hit_terms long"
 )
@@ -70,30 +77,28 @@ def merge_bm25_batch(
         # returned frame is a scan of the just-written epoch partition
         # (one materialization instead of checkpoint + write + recompute,
         # opt guide §1.2).
-        _overwrite_epoch(
-            spark, bm25_score_with_stats(tfdl, df_st, stats), scores_dir, epoch_id
+        overwrite_partitions(
+            bm25_score_with_stats(tfdl, df_st, stats), scores_dir, epoch_id=epoch_id
         )
-        scores = _read_epoch(spark, scores_dir, epoch_id, _SCORE_SCHEMA)
+        scores = read_epoch(spark, scores_dir, epoch_id, SCORE_SCHEMA)
     # fold the batch's own statistics in (df is additive across epochs —
     # document sets are disjoint; totals are plain sums). The two folds
     # write DIFFERENT state dirs and read only the checkpointed tfdl —
     # independent jobs, submitted concurrently (§2.6); the scores write
     # above stays sequential because it READS these dirs' standing
     # partitions.
-    _run_concurrent(
-        lambda: _overwrite_epoch(
-            spark,
+    run_concurrent(
+        lambda: overwrite_partitions(
             tfdl.groupBy("term").agg(F.count(F.lit(1)).alias("df")),
             df_dir,
-            epoch_id,
+            epoch_id=epoch_id,
         ),
-        lambda: _overwrite_epoch(
-            spark,
+        lambda: overwrite_partitions(
             batch.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
                 tfdl.agg(F.sum("tf").alias("t_tokens"))
             ),
             tot_dir,
-            epoch_id,
+            epoch_id=epoch_id,
         ),
     )
     return scores
@@ -101,12 +106,7 @@ def merge_bm25_batch(
 
 def read_bm25_scores(spark: SparkSession, state_dir: str) -> DataFrame:
     """All routed batches so far (per-epoch per-query top-k)."""
-    from ..sources.maintenance import path_exists
-
-    scores_dir = f"{state_dir}/scores"
-    if not path_exists(spark, scores_dir):
-        return spark.createDataFrame([], _SCORE_SCHEMA + ", _epoch int")
-    return spark.read.parquet(scores_dir)
+    return read_state(spark, f"{state_dir}/scores", SCORE_SCHEMA + ", _epoch int")
 
 
 def run_streaming_bm25(
@@ -119,19 +119,8 @@ def run_streaming_bm25(
 ) -> None:
     """Drain the available document files (availableNow), folding each
     micro-batch through the BM25 router."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_bm25_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_bm25_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -39,7 +39,7 @@ from ..operators.dedup import (
     _shingle_arrays,
     verified_containment_from_arrays,
 )
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from .fold import drain, overwrite_partitions, parquet_stream, read_state, run_concurrent
 
 
 def _verified_pairs(arrs_all: DataFrame, cand: DataFrame) -> DataFrame:
@@ -114,9 +114,9 @@ def merge_containment_batch(
     # overwrite; and the two state writes are independent jobs (§2.6).
     links = _verified_pairs(all_arrs, cand)
 
-    _run_concurrent(
-        lambda: _overwrite_epoch(spark, links, links_dir, epoch_id),
-        lambda: _overwrite_epoch(spark, arrs, sh_dir, epoch_id),
+    run_concurrent(
+        lambda: overwrite_partitions(links, links_dir, epoch_id=epoch_id),
+        lambda: overwrite_partitions(arrs, sh_dir, epoch_id=epoch_id),
     )
 
 
@@ -129,20 +129,11 @@ def read_containment_links(spark: SparkSession, state_dir: str) -> DataFrame:
     partitioned write of an empty links frame leaves only _SUCCESS, and
     schema inference would fail — reads as an empty frame (review
     finding)."""
-    from pyspark.sql.utils import AnalysisException
-
-    from ..sources.maintenance import path_exists
-
-    if not path_exists(spark, f"{state_dir}/links"):
-        return spark.createDataFrame([], _LINKS_SCHEMA)
-    try:
-        return (
-            spark.read.parquet(f"{state_dir}/links")
-            .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
-            .distinct()
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], _LINKS_SCHEMA)
+    return (
+        read_state(spark, f"{state_dir}/links", _LINKS_SCHEMA)
+        .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
+        .distinct()
+    )
 
 
 def run_streaming_containment(
@@ -155,19 +146,8 @@ def run_streaming_containment(
 ) -> None:
     """Drain the available document files (availableNow), folding each
     micro-batch into the containment state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_containment_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_containment_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

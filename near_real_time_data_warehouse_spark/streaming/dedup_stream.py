@@ -13,7 +13,7 @@ Per micro-batch, cost ∝ batch — the dedup_graph_incremental contract:
      (operators/dedup.merge_components_with_edges — vertices ∝ touched
      components, remap broadcast-sized).
 
-Replay safety (the exactly-once discipline of etl.py applied here):
+Replay safety (the exactly-once discipline of fold.py):
 shingles and bands land in ``_epoch=<id>`` partitions with dynamic
 partition overwrite, so a re-delivered epoch replaces its own rows
 instead of appending duplicates; label updates reset the replayed
@@ -33,75 +33,7 @@ from ..operators.dedup import (
     connected_components,
     merge_components_with_edges,
 )
-
-
-def _overwrite_epoch(spark: SparkSession, df: DataFrame, out_dir: str, epoch_id: int) -> None:
-    # partitionOverwriteMode as a PER-WRITE option (takes precedence over
-    # the session conf, SPARK-20236 follow-ups) instead of a
-    # set-conf/try/finally toggle: the folds now submit their independent
-    # state writes concurrently (_run_concurrent), and a session-global
-    # toggle would race — one thread's `finally` restoring "static" while
-    # another thread's write is still resolving the mode.
-    (
-        df.withColumn("_epoch", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_epoch")
-        .parquet(out_dir)
-    )
-
-
-def _run_concurrent(*thunks) -> list:
-    """Submit independent Spark actions concurrently (opt guide §2.6):
-    a fold's per-epoch state writes are independent jobs once their
-    shared inputs are locally checkpointed, so one write's task tail
-    back-fills with the next write's stages instead of each write paying
-    its own full AQE stage-wave latency in sequence.
-
-    Each thunk runs with a copy of the caller's Spark local properties,
-    so inside foreachBatch its jobs stay in the streaming query's job
-    group (and are cancelled with it). Returns the thunks' results in
-    order; the first failure is re-raised after every thunk has ended."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import SparkSession
-    from pyspark.util import inheritable_thread_target
-
-    if len(thunks) == 1:
-        return [thunks[0]()]
-    session = SparkSession.active()
-    with ThreadPoolExecutor(len(thunks)) as pool:
-        futures = [pool.submit(inheritable_thread_target(session)(t)) for t in thunks]
-        return [f.result() for f in futures]
-
-
-def _read_epoch(
-    spark: SparkSession, out_dir: str, epoch_id: int, schema: str
-) -> DataFrame:
-    """The just-written epoch's rows back from a state dir — the cheap
-    return frame for folds whose output IS their state write. An
-    all-empty partitioned write leaves only _SUCCESS (no schema), which
-    reads as an empty frame of the declared schema.
-
-    INVARIANT (ADVICE r13): dynamic partition overwrite replaces NOTHING
-    when the written frame is empty, so if a REPLAYED epoch could ever
-    produce zero rows where the original produced some, this read-back
-    would return the stale prior partition instead of the empty result.
-    Safe here because folds are deterministic functions of (batch,
-    standing state minus this epoch): a replayed epoch recomputes the
-    identical frame, so "was non-empty, replays empty" cannot happen —
-    any caller relaxing that determinism must delete the epoch partition
-    before an empty write."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        return (
-            spark.read.parquet(out_dir)
-            .filter(F.col("_epoch") == epoch_id)
-            .drop("_epoch")
-        )
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
+from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
 
 
 def merge_dedup_batch(
@@ -157,9 +89,9 @@ def merge_dedup_batch(
         # all three state writes read only checkpointed frames (labels'
         # lineage ends in the driver-resolved quotient or a per-round
         # checkpoint) — independent jobs, submitted concurrently (§2.6)
-        _run_concurrent(
-            lambda: _overwrite_epoch(spark, arrs, sh_dir, epoch_id),
-            lambda: _overwrite_epoch(spark, batch_bands, bands_dir, epoch_id),
+        run_concurrent(
+            lambda: overwrite_partitions(arrs, sh_dir, epoch_id=epoch_id),
+            lambda: overwrite_partitions(batch_bands, bands_dir, epoch_id=epoch_id),
             lambda: labels.write.mode("overwrite").parquet(labels_dir),
         )
         return pairs
@@ -199,9 +131,9 @@ def merge_dedup_batch(
         .unionByName(batch_ids.select("doc_id", F.col("doc_id").alias("label")))
     )
     labels = merge_components_with_edges(current, new_pairs).localCheckpoint(eager=True)
-    _run_concurrent(
-        lambda: _overwrite_epoch(spark, arrs, sh_dir, epoch_id),
-        lambda: _overwrite_epoch(spark, batch_bands, bands_dir, epoch_id),
+    run_concurrent(
+        lambda: overwrite_partitions(arrs, sh_dir, epoch_id=epoch_id),
+        lambda: overwrite_partitions(batch_bands, bands_dir, epoch_id=epoch_id),
         lambda: labels.write.mode("overwrite").parquet(labels_dir),
     )
     return new_pairs
@@ -217,19 +149,8 @@ def run_streaming_dedup(
 ) -> None:
     """Drain the available document files (availableNow), folding each
     micro-batch into the dedup graph state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_dedup_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_dedup_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -38,23 +38,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import PR_BASE, pagerank_stats, triangle_stats
-from .dedup_stream import _overwrite_epoch, merge_dedup_batch
+from .dedup_stream import merge_dedup_batch
+from .fold import drain, overwrite_partitions, parquet_stream, read_state
 
 _TRI_SCHEMA = "doc_id long, degree long, n_triangles long, clustering_coeff double"
 _PR_SCHEMA = "doc_id long, degree long, rank long"
-
-
-def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    from pyspark.sql.utils import AnalysisException
-
-    from ..sources.maintenance import path_exists
-
-    if not path_exists(spark, path):
-        return spark.createDataFrame([], schema)
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
 
 
 def merge_diagnostics_batch(
@@ -70,15 +58,15 @@ def merge_diagnostics_batch(
     tri_dir = f"{state_dir}/triangles"
     pr_dir = f"{state_dir}/pagerank"
 
-    _overwrite_epoch(spark, new_pairs, pairs_dir, epoch_id)
+    overwrite_partitions(new_pairs, pairs_dir, epoch_id=epoch_id)
     # the standing pair set (distinct: a replayed epoch's rows collapse).
-    # _read_or_empty, NOT bare read.parquet: if the first non-empty batch
+    # read_state, NOT bare read.parquet: if the first non-empty batch
     # yields zero verified pairs the epoch write leaves a directory with
     # only _SUCCESS (no footers), schema inference would raise, and
     # checkpoint replay would re-deliver the epoch and crash again —
     # permanently wedging the stream (the read_linkage_state trap).
     all_pairs = (
-        _read_or_empty(spark, pairs_dir, "doc_a long, doc_b long, _epoch long")
+        read_state(spark, pairs_dir, "doc_a long, doc_b long, _epoch long")
         .select("doc_a", "doc_b").distinct()
         .localCheckpoint(eager=True)
     )
@@ -101,13 +89,13 @@ def merge_diagnostics_batch(
         touched.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi"
     ).localCheckpoint(eager=True)
 
-    stored_tri = _read_or_empty(spark, tri_dir, _TRI_SCHEMA)
+    stored_tri = read_state(spark, tri_dir, _TRI_SCHEMA)
     new_tri = (
         stored_tri.join(touched, "doc_id", "left_anti")
         .unionByName(triangle_stats(touched_pairs))
         .localCheckpoint(eager=True)
     )
-    stored_pr = _read_or_empty(spark, pr_dir, _PR_SCHEMA)
+    stored_pr = read_state(spark, pr_dir, _PR_SCHEMA)
     new_pr = (
         stored_pr.join(touched, "doc_id", "left_anti")
         .unionByName(pagerank_stats(touched, touched_pairs))
@@ -124,8 +112,8 @@ def read_diagnostics_state(
     full-rebuild kernels' output shape); pagerank is materialized to the
     full doc universe — stored endpoint rows plus the closed-form base
     rank for singleton docs."""
-    tri = _read_or_empty(spark, f"{state_dir}/triangles", _TRI_SCHEMA)
-    stored_pr = _read_or_empty(spark, f"{state_dir}/pagerank", _PR_SCHEMA)
+    tri = read_state(spark, f"{state_dir}/triangles", _TRI_SCHEMA)
+    stored_pr = read_state(spark, f"{state_dir}/pagerank", _PR_SCHEMA)
     labels = spark.read.parquet(f"{state_dir}/labels")
     passive = (
         labels.select("doc_id")
@@ -149,19 +137,8 @@ def run_streaming_diagnostics(
 ) -> None:
     """Drain the available document files (availableNow), folding each
     micro-batch into the dedup graph + diagnostics state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_diagnostics_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_diagnostics_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -23,21 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scd import scd2_apply_increment, scd2_versions
+from .fold import drain, overwrite_partitions, parquet_stream
 
 N_BUCKETS = 16
 
 
 def _bucket(key: str) -> F.Column:
     return F.pmod(F.xxhash64(F.col(key)), F.lit(N_BUCKETS))
-
-
-def _write_buckets(spark: SparkSession, df: DataFrame, out_dir: str) -> None:
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def _merge_batch(
@@ -63,7 +55,7 @@ def _merge_batch(
         hist = hist.localCheckpoint(eager=True)
         hist.write.partitionBy("bucket").parquet(out_dir)
         if current_dir is not None:
-            _write_buckets(spark, hist.filter(F.col("is_current")), current_dir)
+            overwrite_partitions(hist.filter(F.col("is_current")), current_dir, "bucket")
         if changes_dir is not None:
             hist.drop("bucket").withColumn("_epoch", F.lit(epoch_id)).write.mode(
                 "append"
@@ -93,13 +85,13 @@ def _merge_batch(
             "_epoch", F.lit(epoch_id)
         )
         delta.write.mode("append").parquet(changes_dir)
-    _write_buckets(spark, merged, out_dir)
+    overwrite_partitions(merged, out_dir, "bucket")
     if current_dir is not None:
         # Read-optimized serving snapshot: exactly one row per key, the
         # open version — what a fact enrichment join actually wants.
         # Same touched-bucket overwrite; rows come from the checkpointed
         # merge, so no read-overwrite hazard on current_dir either.
-        _write_buckets(spark, merged.filter(F.col("is_current")), current_dir)
+        overwrite_partitions(merged.filter(F.col("is_current")), current_dir, "bucket")
 
 
 def run_streaming_scd2(
@@ -121,22 +113,10 @@ def run_streaming_scd2(
     ``current_dir``, also maintains the current-version-only snapshot;
     with ``changes_dir``, appends each epoch's created/rewritten history
     rows as a change-data feed."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(feed_dir)
+    drain(
+        parquet_stream(spark, feed_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: _merge_batch(
+            s, batch, out_dir, key, ts, attr, tie, current_dir, changes_dir, epoch_id
+        ),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        _merge_batch(
-            batch_df.sparkSession, batch_df, out_dir, key, ts, attr, tie,
-            current_dir, changes_dir, epoch_id,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -6,7 +6,7 @@ This is docs_dsir_incremental's production mode made continuous: no
 batch ever rescans history, and the state is two bounded tables
 (≤ DSIR_BUCKETS × languages stat rows + one row per language per epoch).
 
-Replay safety (the dedup_stream.py exactly-once discipline): bucket/lang
+Replay safety (the fold.py exactly-once discipline): bucket/lang
 partials and batch scores all land in ``_epoch=<id>`` partitions with
 dynamic partition overwrite, and the standing side always excludes the
 CURRENT epoch's partitions — so re-delivering an epoch recomputes scores
@@ -25,9 +25,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import dsir_fx, dsir_score_with_stats
-from .dedup_stream import _overwrite_epoch, _read_epoch, _run_concurrent
+from .fold import (
+    drain,
+    overwrite_partitions,
+    parquet_stream,
+    read_epoch,
+    read_state,
+    run_concurrent,
+)
 
-_SCORE_SCHEMA = "doc_id long, n_features long, score_bits long"
+SCORE_SCHEMA = "doc_id long, n_features long, score_bits long"
 
 
 def merge_dsir_batch(
@@ -81,24 +88,22 @@ def merge_dsir_batch(
     # and OTHER epochs' standing partitions, and this write lands before
     # the stats/langs folds below — write directly and return a scan of
     # the just-written epoch partition (opt guide §1.2).
-    _overwrite_epoch(spark, scores, scores_dir, epoch_id)
-    scores = _read_epoch(spark, scores_dir, epoch_id, _SCORE_SCHEMA)
+    overwrite_partitions(scores, scores_dir, epoch_id=epoch_id)
+    scores = read_epoch(spark, scores_dir, epoch_id, SCORE_SCHEMA)
     # the two statistics folds write DIFFERENT state dirs and read only
     # the checkpointed fx/batch — independent jobs, submitted
     # concurrently (§2.6); the scores write above stays sequential
     # because it READS these dirs' standing partitions.
-    _run_concurrent(
-        lambda: _overwrite_epoch(
-            spark,
+    run_concurrent(
+        lambda: overwrite_partitions(
             fx.groupBy("bucket", "lang").agg(F.count(F.lit(1)).alias("c")),
             stats_dir,
-            epoch_id,
+            epoch_id=epoch_id,
         ),
-        lambda: _overwrite_epoch(
-            spark,
+        lambda: overwrite_partitions(
             batch.groupBy("lang").agg(F.count(F.lit(1)).alias("n")),
             langs_dir,
-            epoch_id,
+            epoch_id=epoch_id,
         ),
     )
     return scores
@@ -106,12 +111,7 @@ def merge_dsir_batch(
 
 def read_dsir_scores(spark: SparkSession, state_dir: str) -> DataFrame:
     """All scored batches so far (doc_id, n_features, score_bits, epoch)."""
-    from ..sources.maintenance import path_exists
-
-    scores_dir = f"{state_dir}/scores"
-    if not path_exists(spark, scores_dir):
-        return spark.createDataFrame([], _SCORE_SCHEMA + ", _epoch int")
-    return spark.read.parquet(scores_dir)
+    return read_state(spark, f"{state_dir}/scores", SCORE_SCHEMA + ", _epoch int")
 
 
 def run_streaming_dsir(
@@ -124,19 +124,8 @@ def run_streaming_dsir(
 ) -> None:
     """Drain the available document files (availableNow), folding each
     micro-batch through the DSIR screen."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_dsir_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_dsir_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

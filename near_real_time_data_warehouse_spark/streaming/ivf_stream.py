@@ -14,7 +14,7 @@ State layout at ``state_dir``:
   - ``assignments/`` — (neighbor_id, centroid) inverted-list membership,
     landed in ``_epoch=<id>`` partitions with dynamic partition
     overwrite so a re-delivered epoch replaces its own rows instead of
-    appending duplicates (the etl.py exactly-once discipline).
+    appending duplicates (the fold.py exactly-once discipline).
 
 Per micro-batch cost ∝ batch: one Arrow-batched assignment pass against
 the broadcast centroid block — never a corpus re-scan, never a retrain.
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.similarity import _assign_lists, _train_centroids_on_sample
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
 
 
 def _save_centroids(spark: SparkSession, cmat: np.ndarray, path: str) -> None:
@@ -77,9 +77,9 @@ def merge_ivf_batch(
         # the centroid write and the assignment write are independent
         # jobs once cmat is on the driver — submit concurrently (§2.6)
         assigned = _assign_lists(spark, batch, cmat)
-        _run_concurrent(
+        run_concurrent(
             lambda: _save_centroids(spark, cmat, cent_dir),
-            lambda: _overwrite_epoch(spark, assigned, assign_dir, epoch_id),
+            lambda: overwrite_partitions(assigned, assign_dir, epoch_id=epoch_id),
         )
         return
 
@@ -87,7 +87,7 @@ def merge_ivf_batch(
     # write scans it once) — skip the checkpoint (r14, guide §1.2)
     cmat = _load_centroids(spark, cent_dir)
     assigned = _assign_lists(spark, batch, cmat)
-    _overwrite_epoch(spark, assigned, assign_dir, epoch_id)
+    overwrite_partitions(assigned, assign_dir, epoch_id=epoch_id)
 
 
 def read_ivf_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -107,19 +107,8 @@ def run_streaming_ivf(
 ) -> None:
     """Drain the available embedding files (availableNow), folding each
     micro-batch into the IVF index state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
+    drain(
+        parquet_stream(spark, emb_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_ivf_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_ivf_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

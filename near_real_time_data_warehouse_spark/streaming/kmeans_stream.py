@@ -13,7 +13,7 @@ State layout at ``state_dir``:
   - ``assignments/`` — (vec_id, cluster_id, dist_sq) domain membership,
     landed in ``_epoch=<id>`` partitions with dynamic partition
     overwrite so a re-delivered epoch replaces its own rows instead of
-    appending duplicates (the etl.py exactly-once discipline).
+    appending duplicates (the fold.py exactly-once discipline).
 
 Per micro-batch cost ∝ batch: one Arrow-batched exact-int64 assignment
 pass against the broadcast K×64 centroid state — never a corpus
@@ -28,7 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.clustering import _assign_frame, _train_state_on
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
 
 
 def _save_state(
@@ -80,9 +80,9 @@ def merge_kmeans_batch(
         # the centroid-state write and the assignment write are
         # independent jobs once (ids, m) is on the driver (§2.6)
         assigned = _assign_frame(batch, ids, m)
-        _run_concurrent(
+        run_concurrent(
             lambda: _save_state(spark, ids, m, cent_dir),
-            lambda: _overwrite_epoch(spark, assigned, assign_dir, epoch_id),
+            lambda: overwrite_partitions(assigned, assign_dir, epoch_id=epoch_id),
         )
         return
 
@@ -91,7 +91,7 @@ def merge_kmeans_batch(
     # re-read it once, a whole wasted job per merge (r14, guide §1.2)
     ids, m = _load_state(spark, cent_dir)
     assigned = _assign_frame(batch, ids, m)
-    _overwrite_epoch(spark, assigned, assign_dir, epoch_id)
+    overwrite_partitions(assigned, assign_dir, epoch_id=epoch_id)
 
 
 def read_kmeans_state(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -111,19 +111,8 @@ def run_streaming_kmeans(
 ) -> None:
     """Drain the available embedding files (availableNow), folding each
     micro-batch into the domain state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
+    drain(
+        parquet_stream(spark, emb_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_kmeans_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_kmeans_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -15,7 +15,7 @@ Per micro-batch, cost ∝ batch (the incremental-dedup contract):
      read (the same verified pair may be re-derived by later batches of
      the same names — distinct-on-read makes that harmless).
 
-Replay safety: dynamic partition overwrite per epoch (the etl.py
+Replay safety: dynamic partition overwrite per epoch (the fold.py
 exactly-once discipline); the state side of the candidate join excludes
 the current epoch's own partition, so a re-delivered epoch re-derives
 identical rows instead of pairing against itself.
@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.linkage import blocked_levenshtein_pairs, with_block
-from .dedup_stream import _overwrite_epoch
+from .fold import drain, overwrite_partitions, parquet_stream, read_state
 
 
 def _batch_names(batch: DataFrame) -> DataFrame:
@@ -64,8 +64,8 @@ def merge_linkage_batch(
         links = blocked_levenshtein_pairs(bn, bn)
     links = links.localCheckpoint(eager=True)
 
-    _overwrite_epoch(spark, bn, names_dir, epoch_id)
-    _overwrite_epoch(spark, links, links_dir, epoch_id)
+    overwrite_partitions(bn, names_dir, epoch_id=epoch_id)
+    overwrite_partitions(links, links_dir, epoch_id=epoch_id)
 
 
 _LINKS_SCHEMA = "block string, name_a string, name_b string, distance int"
@@ -77,25 +77,16 @@ def read_linkage_state(spark: SparkSession, state_dir: str) -> tuple[DataFrame, 
     partitioned write of an empty links frame leaves only _SUCCESS (or
     no dir at all), and schema inference would fail — reads as an empty
     frame, mirroring read_containment_links (ADVICE r4)."""
-    from pyspark.sql.utils import AnalysisException
-
-    from ..sources.maintenance import path_exists
-
     names = (
         spark.read.parquet(f"{state_dir}/names")
         .groupBy("p_name", "block")
         .agg(F.sum("n_parts").alias("n_parts"))
     )
-    if not path_exists(spark, f"{state_dir}/links"):
-        return names, spark.createDataFrame([], _LINKS_SCHEMA)
-    try:
-        links = (
-            spark.read.parquet(f"{state_dir}/links")
-            .select("block", "name_a", "name_b", "distance")
-            .distinct()
-        )
-    except AnalysisException:
-        links = spark.createDataFrame([], _LINKS_SCHEMA)
+    links = (
+        read_state(spark, f"{state_dir}/links", _LINKS_SCHEMA)
+        .select("block", "name_a", "name_b", "distance")
+        .distinct()
+    )
     return names, links
 
 
@@ -109,19 +100,8 @@ def run_streaming_linkage(
 ) -> None:
     """Drain the available part files (availableNow), folding each
     micro-batch into the linkage state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parts_dir)
+    drain(
+        parquet_stream(spark, parts_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_linkage_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_linkage_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -9,7 +9,7 @@ component. No batch ever rescans history; the state is one bounded
 table (2080 rows per epoch, additive across epochs because document
 sets are disjoint and Gram sums are linear).
 
-Replay safety (the dedup_stream.py exactly-once discipline): Gram
+Replay safety (the fold.py exactly-once discipline): Gram
 partials and batch projections land in ``_epoch=<id>`` partitions with
 dynamic partition overwrite, and the standing side always excludes the
 CURRENT epoch — re-delivering an epoch recomputes the identical
@@ -35,9 +35,16 @@ from ..operators.similarity import (
     _pca_eigvec_ints,
     _quantized,
 )
-from .dedup_stream import _overwrite_epoch, _read_epoch, _run_concurrent
+from .fold import (
+    drain,
+    overwrite_partitions,
+    parquet_stream,
+    read_epoch,
+    read_state,
+    run_concurrent,
+)
 
-_SCORE_SCHEMA = "vec_id long, label long, proj_num long, proj double"
+SCORE_SCHEMA = "vec_id long, label long, proj_num long, proj double"
 
 
 def _merged_cov_rows(parts) -> list[dict]:
@@ -85,8 +92,6 @@ def merge_pca_batch(
         # independent Spark jobs (checkpointed batch vs. gram parquet) —
         # collect them concurrently so the second doesn't queue behind
         # the first's stage tail (§2.6; both are 2080-row bounded)
-        from concurrent.futures import ThreadPoolExecutor
-
         standing = (
             spark.read.parquet(gram_dir)
             .filter(F.col("_epoch") != epoch_id)
@@ -98,11 +103,8 @@ def merge_pca_batch(
                 F.sum("sum_prod").alias("sum_prod"),
             )
         )
-        with ThreadPoolExecutor(2) as pool:
-            f_batch = pool.submit(_gram_agg(batch).collect)
-            f_standing = pool.submit(standing.collect)
-            batch_rows = f_batch.result()  # 2080 rows, bounded
-            parts = [batch_rows, f_standing.result()]
+        parts = run_concurrent(_gram_agg(batch).collect, standing.collect)
+        batch_rows = parts[0]
     else:
         batch_rows = _gram_agg(batch).collect()  # 2080 rows, bounded
         parts = [batch_rows]
@@ -126,9 +128,8 @@ def merge_pca_batch(
     # the projection write reads only the checkpointed batch + driver
     # state, the Gram write only the driver-side partial rows — two
     # independent jobs on different dirs, submitted concurrently (§2.6)
-    _run_concurrent(
-        lambda: _overwrite_epoch(
-            spark,
+    run_concurrent(
+        lambda: overwrite_partitions(
             q.withColumn("v", F.array([F.lit(x).cast("long") for x in v])).select(
                 "vec_id",
                 F.col("label").cast("long").alias("label"),
@@ -136,21 +137,16 @@ def merge_pca_batch(
                 (proj_num.cast("double") / F.lit(den)).alias("proj"),
             ),
             scores_dir,
-            epoch_id,
+            epoch_id=epoch_id,
         ),
-        lambda: _overwrite_epoch(spark, gram_batch, gram_dir, epoch_id),
+        lambda: overwrite_partitions(gram_batch, gram_dir, epoch_id=epoch_id),
     )
-    return _read_epoch(spark, scores_dir, epoch_id, _SCORE_SCHEMA)
+    return read_epoch(spark, scores_dir, epoch_id, SCORE_SCHEMA)
 
 
 def read_pca_scores(spark: SparkSession, state_dir: str) -> DataFrame:
     """All projected batches so far (vec_id, label, proj_num, proj, epoch)."""
-    from ..sources.maintenance import path_exists
-
-    scores_dir = f"{state_dir}/scores"
-    if not path_exists(spark, scores_dir):
-        return spark.createDataFrame([], _SCORE_SCHEMA + ", _epoch int")
-    return spark.read.parquet(scores_dir)
+    return read_state(spark, f"{state_dir}/scores", SCORE_SCHEMA + ", _epoch int")
 
 
 def run_streaming_pca(
@@ -163,19 +159,8 @@ def run_streaming_pca(
 ) -> None:
     """Drain the available vector files (availableNow), folding each
     micro-batch through the PCA maintenance."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(vec_dir)
+    drain(
+        parquet_stream(spark, vec_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_pca_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_pca_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

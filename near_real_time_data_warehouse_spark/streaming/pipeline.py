@@ -17,25 +17,29 @@ overwrites a per-epoch_id directory, so a replayed batch rewrites rather
 than duplicates — vs the reference's commit/rollback-per-batch
 at-least-once (:465-471, T5 in SURVEY.md §2.6).
 
-Per micro-batch the sink makes one ``etl.load_star_batch`` call: one
-aggregate over the persisted batch yields its key sets (bounded by the
-masters) and, on the metered path, the loaded/evicted counts; the fact
-write and the appends of dimensions with new keys then run concurrently.
+Both sinks enrich with the one flagged join (``etl.enrich``: customer
+leg LEFT plus ``cust_matched``) and make one ``etl.load_star_batch``
+call per micro-batch: one aggregate over the persisted batch yields its
+key sets (bounded by the masters) and its loaded/evicted counts; only
+matched rows load, and the fact write and the appends of dimensions
+with new keys then run concurrently. ``streaming.fold.drain`` runs the
+query.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..etl import (
     enrich,
-    enrich_flagged,
     load_star_batch,
     orphan_transactions,
     read_customer_master,
     read_product_master,
     read_transactions,
 )
+from ..sources.maintenance import path_exists
+from .fold import drain
 from .monitor import EvictionLedger
 
 
@@ -52,42 +56,27 @@ def run_streaming_etl(
     """Replay transaction CSVs as a stream and load the star schema;
     blocks until the source is drained (availableNow).
 
-    With a ``metrics`` ledger the enrichment keeps the customer leg as a
-    flagged LEFT join (``enrich_flagged``): the loader's one aggregate over
-    the already-joined batch also counts loaded vs evicted rows, and only
-    the matched rows are loaded — facts are bit-identical to the default
-    path, and the reference's per-batch eviction counters
-    (hybrid_join.py:208,236,354) become observable."""
+    With a ``metrics`` ledger each batch's loaded and evicted counts —
+    the reference's per-batch eviction counters
+    (hybrid_join.py:208,236,354) — are recorded there."""
     cust = read_customer_master(spark, customer_master_path)
     prod = read_product_master(spark, product_master_path)
     stream = read_transactions(
         spark, transactions_dir, streaming=True, max_files_per_trigger=max_files_per_trigger
     )
-    enriched = (
-        enrich(stream, cust, prod) if metrics is None
-        else enrich_flagged(stream, cust, prod)
-    )
 
-    def sink(batch_df, epoch_id: int) -> None:  # noqa: ANN001
+    def sink(s: SparkSession, batch: DataFrame, epoch_id: int) -> None:
         # epoch_id keys the fact write's overwrite directory: foreachBatch
         # alone is at-least-once, and a crash between the fact append and
         # the checkpoint commit would replay the batch; the per-epoch
         # overwrite (+ first-writer-wins dim upserts) makes the replay
         # idempotent. load_star_batch is looked up in this module at call
         # time, so a caller may wrap it (the traced benchmark run does).
-        counts = load_star_batch(
-            batch_df.sparkSession, batch_df, cust, prod, warehouse_dir, epoch_id=epoch_id
-        )
+        counts = load_star_batch(s, batch, cust, prod, warehouse_dir, epoch_id=epoch_id)
         if metrics is not None:
             metrics.record(epoch_id, **counts)
 
-    query = (
-        enriched.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(enrich(stream, cust, prod), checkpoint_dir, sink)
 
 
 def run_streaming_etl_with_retry(
@@ -125,27 +114,18 @@ def run_streaming_etl_with_retry(
         spark, transactions_dir, streaming=True, max_files_per_trigger=max_files_per_trigger
     )
 
-    def sink(batch_df, epoch_id: int) -> None:  # noqa: ANN001
+    def sink(s: SparkSession, batch: DataFrame, epoch_id: int) -> None:
         if on_batch is not None:
             on_batch(epoch_id)
-        s = batch_df.sparkSession
         # Re-read masters per batch: the refresh is what rescues orphans.
         cust = read_customer_master(s, customer_master_path)
         prod = read_product_master(s, product_master_path)
-        from ..sources.maintenance import path_exists
-
-        full = batch_df
+        full = batch
         if path_exists(s, orphans_dir):
-            full = batch_df.unionByName(s.read.schema(batch_df.schema).parquet(orphans_dir))
+            full = batch.unionByName(s.read.schema(batch.schema).parquet(orphans_dir))
         # Materialize BEFORE overwriting orphans_dir (read-overwrite hazard).
         orphans = orphan_transactions(full, cust).localCheckpoint(eager=True)
         load_star_batch(s, enrich(full, cust, prod), cust, prod, warehouse_dir, epoch_id=epoch_id)
         orphans.write.mode("overwrite").parquet(orphans_dir)
 
-    query = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    drain(stream, checkpoint_dir, sink)

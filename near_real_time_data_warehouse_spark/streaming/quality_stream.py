@@ -19,7 +19,7 @@ Rule shapes and their streaming form:
   stream state — the read side evaluates it directly.
 
 Epochs land in ``_epoch=<id>`` partitions with dynamic partition
-overwrite (the etl.py exactly-once discipline): a re-delivered epoch
+overwrite (the fold.py exactly-once discipline): a re-delivered epoch
 replaces its own rows, so replay is idempotent — tested, along with
 drained ≡ batch-gate equality on every rule."""
 
@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
 
 _PRED_RULES = (
     "l_quantity_between_1_50",
@@ -111,11 +111,11 @@ def merge_quality_batch(
     )
     # both state writes read only the checkpointed batch (+ the static
     # parent) — independent jobs, submitted concurrently (§2.6)
-    _run_concurrent(
-        lambda: _overwrite_epoch(
-            spark, _batch_rule_rows(batch, orders), f"{state_dir}/rules", epoch_id
+    run_concurrent(
+        lambda: overwrite_partitions(
+            _batch_rule_rows(batch, orders), f"{state_dir}/rules", epoch_id=epoch_id
         ),
-        lambda: _overwrite_epoch(spark, keys, f"{state_dir}/keys", epoch_id),
+        lambda: overwrite_partitions(keys, f"{state_dir}/keys", epoch_id=epoch_id),
     )
 
 
@@ -171,21 +171,8 @@ def run_streaming_quality(
 ) -> None:
     """Drain the available lineitem files (availableNow), folding each
     micro-batch into the quality state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(lineitem_dir)
+    drain(
+        parquet_stream(spark, lineitem_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_quality_batch(s, batch, orders, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_quality_batch(
-            batch_df.sparkSession, batch_df, orders, state_dir, epoch_id
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.maintenance import path_exists
+from .fold import drain, overwrite_partitions, parquet_stream
+
 _HOUR_US = 3_600_000_000
 _DAY_S = 86_400
 
@@ -43,13 +46,11 @@ def _merge_into(spark: SparkSession, partial: DataFrame, out_dir: str) -> list[i
     touched hour partitions, re-aggregate, dynamically overwrite them.
     Returns the touched hour keys so a chained rollup can refresh from
     them."""
-    import os
-
     touched = [r.hour_epoch_s for r in partial.select("hour_epoch_s").distinct().collect()]
     if not touched:
         return touched
     merged = partial
-    if os.path.exists(out_dir):
+    if path_exists(spark, out_dir):
         existing = spark.read.parquet(out_dir).filter(F.col("hour_epoch_s").isin(touched))
         merged = partial.unionByName(existing)
     result = (
@@ -66,12 +67,7 @@ def _merge_into(spark: SparkSession, partial: DataFrame, out_dir: str) -> list[i
         # cluster scale a staging-dir + swap plays the same role.
         .localCheckpoint(eager=True)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        result.write.mode("overwrite").partitionBy("hour_epoch_s").parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions(result, out_dir, "hour_epoch_s")
     return touched
 
 
@@ -99,12 +95,7 @@ def _refresh_day_rollup(
             F.sum("total_value").alias("total_value"),
         )
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        result.write.mode("overwrite").partitionBy("day_epoch_s").parquet(day_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions(result, day_dir, "day_epoch_s")
 
 
 def run_continuous_rollup(
@@ -120,21 +111,14 @@ def run_continuous_rollup(
     available input (availableNow) with one merge per micro-batch. With
     `day_dir`, also maintains a chained day-level rollup refreshed from
     the hour table for only the days the batch touched."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-    )
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
-        touched = _merge_into(batch_df.sparkSession, _hourly_partial(batch_df), out_dir)
+    def sink(s: SparkSession, batch: DataFrame, epoch_id: int) -> None:  # noqa: ARG001
+        touched = _merge_into(s, _hourly_partial(batch), out_dir)
         if day_dir is not None:
-            _refresh_day_rollup(batch_df.sparkSession, touched, out_dir, day_dir)
+            _refresh_day_rollup(s, touched, out_dir, day_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        parquet_stream(spark, events_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        sink,
     )
-    q.awaitTermination()

@@ -43,25 +43,10 @@ from ..operators.clustering import (
     _train_state_on,
 )
 from ..operators.similarity import _quant_np
-from .dedup_stream import _overwrite_epoch, _run_concurrent
+from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
 from .kmeans_stream import _load_state, _save_state
 
 _PAIR_SCHEMA = "vec_a long, vec_b long, cluster_id long, cosine double"
-
-
-def _overwrite_cluster_epoch(
-    spark: SparkSession, df: DataFrame, out_dir: str, epoch_id: int
-) -> None:
-    """Dynamic overwrite partitioned (cluster_id, _epoch): cluster-first
-    for pruning, epoch-second for exactly-once replay. Per-write option,
-    not a session-conf toggle — see dedup_stream._overwrite_epoch."""
-    (
-        df.withColumn("_epoch", F.lit(epoch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster_id", "_epoch")
-        .parquet(out_dir)
-    )
 
 
 def merge_semdedup_batch(
@@ -245,10 +230,12 @@ def merge_semdedup_batch(
         # write, the member write, and the whole count→pair→write chain
         # are three independent jobs (§2.6) — the shard-count collect
         # now overlaps the other two writes instead of gating them (r14)
-        _run_concurrent(
+        run_concurrent(
             lambda: _save_state(spark, ids, m, cent_dir),
-            lambda: _overwrite_epoch(spark, _build_pairs(), pair_dir, epoch_id),
-            lambda: _overwrite_cluster_epoch(spark, assigned, mem_dir, epoch_id),
+            lambda: overwrite_partitions(_build_pairs(), pair_dir, epoch_id=epoch_id),
+            lambda: overwrite_partitions(
+                assigned, mem_dir, "cluster_id", epoch_id=epoch_id
+            ),
         )
     else:
         # warm path stays sequential: the shard probe and the pair pass
@@ -256,8 +243,8 @@ def merge_semdedup_batch(
         # REWRITES this epoch's partitions of the same store —
         # overlapping them would race the reader's file listing against
         # the writer's partition commit
-        _overwrite_epoch(spark, _build_pairs(), pair_dir, epoch_id)
-        _overwrite_cluster_epoch(spark, assigned, mem_dir, epoch_id)
+        overwrite_partitions(_build_pairs(), pair_dir, epoch_id=epoch_id)
+        overwrite_partitions(assigned, mem_dir, "cluster_id", epoch_id=epoch_id)
 
 
 def read_semdedup_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -277,19 +264,8 @@ def run_streaming_semdedup(
 ) -> None:
     """Drain the available embedding files (availableNow), folding each
     micro-batch into the SemDedup state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
+    drain(
+        parquet_stream(spark, emb_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_semdedup_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_semdedup_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -13,7 +13,7 @@ hash the batch also carries — alongside the batch itself; untouched
 docs keep their stored rows. Cost per batch ∝ batch tokens + occurrences
 of batch-touched hashes, never the corpus.
 
-Replay safety (the exactly-once discipline of dedup_stream.py): window
+Replay safety (the exactly-once discipline of fold.py): window
 hashes land in ``_epoch=<id>`` partitions with dynamic partition
 overwrite, and the standing side always excludes the incoming batch's
 doc_ids, so re-delivering an epoch re-derives the identical state
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _positional_shingles, _spans_profile, substring_spans_df
-from .dedup_stream import _overwrite_epoch
+from .fold import drain, overwrite_partitions, parquet_stream, read_state
 
 
 def merge_substring_batch(
@@ -48,7 +48,7 @@ def merge_substring_batch(
 
     if not path_exists(spark, prof_dir):
         prof = substring_spans_df(batch).localCheckpoint(eager=True)
-        _overwrite_epoch(spark, batch_sh, sh_dir, epoch_id)
+        overwrite_partitions(batch_sh, sh_dir, epoch_id=epoch_id)
         prof.write.mode("overwrite").parquet(prof_dir)
         return prof
 
@@ -85,23 +85,19 @@ def merge_substring_batch(
         .unionByName(prof_new)
         .localCheckpoint(eager=True)
     )
-    _overwrite_epoch(spark, batch_sh, sh_dir, epoch_id)
+    overwrite_partitions(batch_sh, sh_dir, epoch_id=epoch_id)
     merged.write.mode("overwrite").parquet(prof_dir)
     return prof_new
 
 
 def read_substring_profile(spark: SparkSession, state_dir: str) -> DataFrame:
     """The maintained per-document span profile (empty-safe)."""
-    from ..sources.maintenance import path_exists
-
-    prof_dir = f"{state_dir}/profile"
-    if not path_exists(spark, prof_dir):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_tokens int, n_dup_spans long, dup_tokens int, "
-            "longest_span int, dup_fraction double",
-        )
-    return spark.read.parquet(prof_dir)
+    return read_state(
+        spark,
+        f"{state_dir}/profile",
+        "doc_id long, n_tokens int, n_dup_spans long, dup_tokens int, "
+        "longest_span int, dup_fraction double",
+    )
 
 
 def run_streaming_substring(
@@ -114,19 +110,8 @@ def run_streaming_substring(
 ) -> None:
     """Drain the available document files (availableNow), folding each
     micro-batch into the substring-dedup state."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
+    drain(
+        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge_substring_batch(s, batch, state_dir, epoch_id),
     )
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_substring_batch(batch_df.sparkSession, batch_df, state_dir, epoch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -348,7 +348,8 @@ def test_replayed_batch_appends_no_dimension_file(spark, paths, tmp_path_factory
     wh = str(tmp_path_factory.mktemp("warehouse_known_keys"))
     cust = etl.read_customer_master(spark, str(paths["customer"]))
     prod = etl.read_product_master(spark, str(paths["product"]))
-    enriched = etl.enrich(etl.read_transactions(spark, str(paths["transactions"])), cust, prod)
+    txns = etl.read_transactions(spark, str(paths["transactions"]))
+    enriched = etl.enrich(txns, cust, prod)
 
     first = etl.load_star_batch(spark, enriched, cust, prod, wh, epoch_id=0)
     files = _dim_files(wh)
@@ -357,7 +358,8 @@ def test_replayed_batch_appends_no_dimension_file(spark, paths, tmp_path_factory
     replay = etl.load_star_batch(spark, enriched, cust, prod, wh, epoch_id=0)
     assert _dim_files(wh) == files
     assert _star_sets(spark, wh) == star
-    assert replay == first and first["evicted"] == 0
+    assert replay == first
+    assert first["evicted"] == etl.orphan_transactions(txns, cust).count()
 
 
 def test_warm_metered_microbatch_job_count(spark, paths, tmp_path_factory):
@@ -462,6 +464,58 @@ def test_crash_in_concurrent_write_then_rerun_equals_clean(
     clean_star, clean_batches = clean_three_epochs
     assert _star_sets(spark, wh) == clean_star
     assert ledger.batches == clean_batches
+
+
+def test_retry_sink_crash_after_load_then_rerun_equals_clean(
+    spark, paths, tmp_path_factory, monkeypatch
+):
+    """``run_streaming_etl_with_retry``: the load of epoch 1 raises after
+    its star writes, before the parked rows are rewritten. The failure
+    reaches the caller, epoch 1 is not committed, and a rerun on the same
+    checkpoint and orphans dir leaves the star and the parked rows equal
+    to a clean run's."""
+    from pyspark.errors import StreamingQueryException
+
+    from near_real_time_data_warehouse_spark.streaming import pipeline
+
+    def drain(base: Path) -> None:
+        pipeline.run_streaming_etl_with_retry(
+            spark, str(base / "txns"), str(paths["customer"]), str(paths["product"]),
+            str(base / "wh"), str(base / "ckpt"), str(base / "orphans"),
+            max_files_per_trigger=1,
+        )
+
+    def parked(base: Path) -> list[tuple]:
+        rows = spark.read.parquet(str(base / "orphans")).collect()
+        return sorted(tuple(str(v) for v in r) for r in rows)
+
+    clean = tmp_path_factory.mktemp("retry_clean")
+    _write_parts(paths, clean / "txns", 3)
+    drain(clean)
+
+    base = tmp_path_factory.mktemp("retry_crash")
+    _write_parts(paths, base / "txns", 3)
+    load, fired = pipeline.load_star_batch, []
+
+    def load_then_crash(*a, **kw):  # noqa: ANN002, ANN003, ANN202
+        counts = load(*a, **kw)
+        if kw["epoch_id"] == 1 and not fired:
+            fired.append(True)
+            raise RuntimeError("injected crash after the star writes")
+        return counts
+
+    monkeypatch.setattr(pipeline, "load_star_batch", load_then_crash)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        drain(base)
+    assert fired
+    assert os.path.isdir(f"{base}/wh/salefact/epoch=1")
+    assert os.path.exists(f"{base}/ckpt/commits/0")
+    assert not os.path.exists(f"{base}/ckpt/commits/1")
+
+    drain(base)
+    assert _star_sets(spark, str(base / "wh")) == _star_sets(spark, str(clean / "wh"))
+    assert parked(base) == parked(clean)
+    assert parked(clean)  # the fixture's unknown customer stays parked
 
 
 def test_ledger_counts_a_replayed_epoch_once():
