@@ -257,7 +257,7 @@ def main() -> None:
 
     os.environ.setdefault("SPARK_GRAFT_UI", "1")  # REST API for shuffle bytes
 
-    from near_real_time_data_warehouse_spark import driver_api
+    from near_real_time_data_warehouse_spark import driver_api, memo
     from near_real_time_data_warehouse_spark.session import get_spark
 
     spark = get_spark("nrtdw_bench")
@@ -302,7 +302,7 @@ def main() -> None:
 
         best = float("inf")
         for _ in range(heavy_runs):
-            star_mod._STAR_CACHE.clear()  # cold load each attempt
+            memo.clear("star")  # cold load each attempt
             t0 = time.perf_counter()
             star = star_mod.star_tables(spark, sf_dir)
             # The four table loads are independent Spark jobs — submit
@@ -322,24 +322,11 @@ def main() -> None:
     # billed as their own line items so the per-entry timings below
     # honestly measure steady-state marginal cost — min-of-N with a memo
     # would otherwise silently drop the build cost from the total.
-    def _reset_ann():
-        from near_real_time_data_warehouse_spark.operators import similarity
-
-        # destroys the query-block broadcast before dropping the memos
-        # (ADVICE r13: a bare clear() stranded one broadcast per reset)
-        similarity.clear_ann_memos()
-
     def _ann_build(s, d):
         from concurrent.futures import ThreadPoolExecutor
 
         from near_real_time_data_warehouse_spark.operators import similarity
 
-        # Warm the memos EVERY build thread reads (corpus count, query
-        # block) on the main thread first: the memo dicts are plain
-        # check-then-set, so concurrent cold misses would compute
-        # duplicate jobs and leak the losing broadcast (ADVICE r13).
-        similarity._emb_count(s, d)
-        similarity._query_block(s, d)
         # The standing ANN state the entries share: brute truth, IVF
         # result, LSH bucketed corpus (r13 opt: now memoized like the
         # others), and the query-block broadcast. The builds are
@@ -362,20 +349,6 @@ def main() -> None:
         )
         with ThreadPoolExecutor(len(builds)) as pool:
             list(pool.map(lambda b: b(), builds))
-
-    def _reset_graph():
-        from near_real_time_data_warehouse_spark.operators import dedup
-
-        for m in (
-            dedup._SHINGLE_MEMO,
-            dedup._ARRAYS_MEMO,
-            dedup._SIG_MEMO,
-            dedup._BANDS_MEMO,
-            dedup._PAIRS_MEMO,
-            dedup._COMPONENTS_MEMO,
-            dedup._NEW_PAIRS_MEMO,
-        ):
-            m.clear()
 
     def _graph_build(s, d):
         from concurrent.futures import ThreadPoolExecutor
@@ -404,11 +377,6 @@ def main() -> None:
         # minhash chain's memoized state, so it runs after it.
         dedup.dedup_graph_incremental(s, d).write.format("noop").mode("overwrite").save()
 
-    def _reset_search():
-        from near_real_time_data_warehouse_spark.operators import text
-
-        text.clear_search_memos()
-
     def _search_build(s, d):
         from concurrent.futures import ThreadPoolExecutor
 
@@ -435,15 +403,15 @@ def main() -> None:
             list(pool.map(lambda b: b(), builds))
         text._rocchio_block(s, d)
 
-    for build_name, reset, build in (
-        ("ann_index_build", _reset_ann, _ann_build),
-        ("dedup_graph_build", _reset_graph, _graph_build),
-        ("text_search_build", _reset_search, _search_build),
+    for build_name, group, build in (
+        ("ann_index_build", "ann", _ann_build),
+        ("dedup_graph_build", "dedup", _graph_build),
+        ("text_search_build", "search", _search_build),
     ):
         if only is None or build_name in only:
             best = float("inf")
             for _ in range(heavy_runs):
-                reset()
+                memo.clear(group)
                 t0 = time.perf_counter()
                 build(spark, sf_dir)
                 best = min(best, time.perf_counter() - t0)

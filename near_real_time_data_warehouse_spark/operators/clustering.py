@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from . import registry
 from .similarity import (
     _knee_scale,
@@ -73,12 +74,6 @@ def _k_clusters(n: int) -> int:
     """Domain count for an n-vector corpus: static K_CLUSTERS up to the
     knee, then ∝ √corpus (doubling per 4× the corpus)."""
     return _knee_scale(n, K_CLUSTERS, KMEANS_TARGET_N)
-
-
-# (applicationId, sf_dir) -> (cluster_ids int64[k], centroid matrix int64[k,64])
-# Tiny driver-side trained state — the persisted centroid table a real
-# pipeline maintains; see session.clear_query_memos.
-_KMEANS_STATE_MEMO: dict[tuple[str, str], tuple[np.ndarray, np.ndarray]] = {}
 
 
 def _init_state_on(e: DataFrame, n: int | None = None) -> tuple[np.ndarray, np.ndarray]:
@@ -265,13 +260,12 @@ def _train_state_on(e: DataFrame) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _trained_state(spark: SparkSession, sf_dir: str) -> tuple[np.ndarray, np.ndarray]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _KMEANS_STATE_MEMO.get(key)
-    if got is not None:
-        return got
-    got = _train_state_on(_emb(spark, sf_dir))
-    _KMEANS_STATE_MEMO[key] = got
-    return got
+    """(cluster_ids int64[k], centroid matrix int64[k,64]) per session —
+    tiny driver-side trained state, the persisted centroid table a real
+    pipeline maintains."""
+    return memo.cached(
+        spark, "kmeans", ("state", sf_dir), lambda: _train_state_on(_emb(spark, sf_dir))
+    )
 
 
 def _assign_frame(e: DataFrame, ids: np.ndarray, m: np.ndarray) -> DataFrame:

@@ -28,6 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..sources.testdata import load_table_parallel
 from . import registry
 from .text import _NORM_SQL, _norm_col
@@ -56,8 +57,6 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # materializes once and truncates the lineage to an RDD scan; the memo
 # keyed on (session, sf_dir, cap) makes repeat calls free. At cluster
 # scale the same role is played by a bucketed intermediate table.
-_SHINGLE_MEMO: dict[tuple[str, str, int | None], DataFrame] = {}
-_ARRAYS_MEMO: dict[tuple[str, str, int | None], DataFrame] = {}
 
 
 def _arrays_materialized(
@@ -71,15 +70,14 @@ def _arrays_materialized(
     join the arrays directly (guide §1.2: don't compute the same
     tokenization three times; §2.3: shuffle one array per doc, not one
     row per (doc, shingle))."""
-    key = (spark.sparkContext.applicationId, sf_dir, cap)
-    arrs = _ARRAYS_MEMO.get(key)
-    if arrs is None:
+
+    def build() -> DataFrame:
         d = _docs(spark, sf_dir)
         if cap is not None:
             d = d.filter(F.col("doc_id") < cap)
-        arrs = _local_checkpoint_stats_clean(_shingle_arrays(d), eager=False)
-        _ARRAYS_MEMO[key] = arrs
-    return arrs
+        return _local_checkpoint_stats_clean(_shingle_arrays(d), eager=False)
+
+    return memo.cached(spark, "dedup", ("arrays", sf_dir, cap), build)
 
 
 def _shingles_materialized(
@@ -92,14 +90,14 @@ def _shingles_materialized(
     exploded build: ``_shingles`` IS explode(array_distinct(...)) with a
     ``size >= n`` filter, and the sketch's empty arrays (short/NULL
     docs) explode to no rows — the same absence."""
-    key = (spark.sparkContext.applicationId, sf_dir, cap)
-    sh = _SHINGLE_MEMO.get(key)
-    if sh is None:
-        sh = _arrays_materialized(spark, sf_dir, cap).select(
+    return memo.cached(
+        spark,
+        "dedup",
+        ("shingles", sf_dir, cap),
+        lambda: _arrays_materialized(spark, sf_dir, cap).select(
             "doc_id", F.explode("arr").alias("shingle")
-        )
-        _SHINGLE_MEMO[key] = sh
-    return sh
+        ),
+    )
 
 
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,33 +354,27 @@ def _bands_from_sig(with_sig: DataFrame) -> DataFrame:
 # feeds the band build AND the prefiltered entry's estimate join — one
 # checkpointed hash-array build per (session, sf_dir), derived from the
 # shared array sketch (one tokenize pass total; r14).
-_SIG_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _sigs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _SIG_MEMO.get(key)
-    if sig is None:
-        sig = _signature_table_from_arrays(_arrays_materialized(spark, sf_dir))
-        _SIG_MEMO[key] = sig
-    return sig
+    return memo.cached(
+        spark,
+        "dedup",
+        ("sigs", sf_dir),
+        lambda: _signature_table_from_arrays(_arrays_materialized(spark, sf_dir)),
+    )
 
 
 # Band table memo: the signature tree (32 permutation mins + 8 band
 # md5s) feeds the LSH self-join, the ingestion-time cross-join, and the
 # components family — one checkpointed build per (session, sf_dir).
-_BANDS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _bands_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    bands = _BANDS_MEMO.get(key)
-    if bands is None:
-        bands = _local_checkpoint_stats_clean(
+    return memo.cached(
+        spark,
+        "dedup",
+        ("bands", sf_dir),
+        lambda: _local_checkpoint_stats_clean(
             _bands_from_sig(_sigs_materialized(spark, sf_dir)), eager=False
-        )
-        _BANDS_MEMO[key] = bands
-    return bands
+        ),
+    )
 
 
 # Verified-pair memo: the true-Jaccard pair table feeds the components
@@ -390,9 +382,6 @@ def _bands_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # entry's standing corpus state — one checkpointed build per
 # (session, sf_dir), like the persisted `near_dup_pairs` table a real
 # pipeline maintains next to `doc_components`.
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32) + LSH(8×4) near-dup pairs, verified with true Jaccard.
 
@@ -401,14 +390,14 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature) → distinct candidate pairs → verify. No all-pairs stage
     anywhere, so the same plan runs at 100 TB; candidate volume is
     controlled by the band/row choice, and AQE handles skewed buckets."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PAIRS_MEMO.get(key)
-    if got is None:
-        got = _local_checkpoint_stats_clean(
+    return memo.cached(
+        spark,
+        "dedup",
+        ("pairs", sf_dir),
+        lambda: _local_checkpoint_stats_clean(
             _minhash_lsh_pairs_build(spark, sf_dir), eager=False
-        )
-        _PAIRS_MEMO[key] = got
-    return got
+        ),
+    )
 
 
 def _band_candidates(bands: DataFrame) -> DataFrame:
@@ -1022,16 +1011,13 @@ FROM ranked
 # (localCheckpoint: materialized once, lineage truncated). At cluster
 # scale this is the persisted `doc_components` intermediate table every
 # curation pipeline maintains.
-_COMPONENTS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _memoized_components(tag: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    key = (tag, spark.sparkContext.applicationId, sf_dir)
-    got = _COMPONENTS_MEMO.get(key)
-    if got is None:
-        got = _local_checkpoint_stats_clean(build(), eager=False)
-        _COMPONENTS_MEMO[key] = got
-    return got
+    return memo.cached(
+        spark,
+        "dedup",
+        ("components", tag, sf_dir),
+        lambda: _local_checkpoint_stats_clean(build(), eager=False),
+    )
 
 
 def dedup_components_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1646,19 +1632,18 @@ def dedup_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Verified batch-touched pairs feed the graph merge AND the incremental
 # diagnostics (PageRank / triangles) — one checkpointed build per
 # (session, sf_dir), the `new_near_dup_pairs` staging table of a real fold.
-_NEW_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def batch_new_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Steps 1-2 of the incremental fold: the incoming batch's band
     signatures against the full band table → LSH collisions with ≥1
     batch endpoint (batch×corpus ∪ batch×batch — corpus×corpus pairs
     cannot change and are never recomputed) → true-Jaccard verification.
     Cost ∝ batch."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _NEW_PAIRS_MEMO.get(key)
-    if got is not None:
-        return got
+    return memo.cached(
+        spark, "dedup", ("new_pairs", sf_dir), lambda: _batch_new_pairs(spark, sf_dir)
+    )
+
+
+def _batch_new_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_batch = F.col("doc_id") % _BATCH_MOD == 0
     arrs = _arrays_materialized(spark, sf_dir)
     bands = _bands_materialized(spark, sf_dir)
@@ -1677,9 +1662,7 @@ def batch_new_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    got = _jaccard_pairs_from_arrays(arrs, cand_new).localCheckpoint(eager=False)
-    _NEW_PAIRS_MEMO[key] = got
-    return got
+    return _jaccard_pairs_from_arrays(arrs, cand_new).localCheckpoint(eager=False)
 
 
 # Above this many distinct quotient edges, the merge falls back to the
@@ -2663,13 +2646,6 @@ _SUBSTR_GRAM_SQL = " || ' ' || ".join(f"toks[i+{k}]" for k in range(SUBSTR_K))
 
 # Shared CTE prefix of the substring-dedup profile and apply oracles:
 # tokenized docs (d), window-bearing docs (b), positional window hashes (sh).
-def _pos_sh_ctes(src: str = "documents") -> str:
-    """The shared CTE prefix with a parameterizable document source —
-    composition oracles (docs_curation_classified) point ``src`` at a
-    pre-filtered CTE instead of the raw table."""
-    return _POS_SH_CTES.replace("FROM documents\n", f"FROM {src}\n", 1)
-
-
 _POS_SH_CTES = f"""d AS (
   SELECT doc_id, list_filter(string_split({_NORM_SQL}, ' '), t -> t <> '') AS toks
   FROM documents

@@ -75,11 +75,6 @@ _IDCT_C = np.array(
 )
 
 
-def _idct2(coeffs: np.ndarray) -> np.ndarray:
-    """Separable 2-D inverse DCT of an 8×8 coefficient block."""
-    return _IDCT_C.T @ coeffs @ _IDCT_C
-
-
 class _Huffman:
     """Canonical Huffman table from DHT (bits per length, values)."""
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..sources.testdata import load_table_parallel
 from . import registry
 
@@ -1028,7 +1029,6 @@ def _bpe_merge_round(sym_df: DataFrame) -> tuple[DataFrame, str, str, int]:
 # a 1-row argmax action); the merges entry and the encode entry both
 # consume it, so it's memoized per (session, sf_dir) like the dedup
 # band tables — the persisted `merges.txt` + vocab of a real tokenizer.
-_BPE_TRAIN_MEMO: dict[tuple[str, str, str], tuple[DataFrame, list]] = {}
 
 
 def _bpe_train(
@@ -1037,18 +1037,17 @@ def _bpe_train(
     """``scope``: 'full' trains on the whole corpus (the merges/encode
     entries); 'train' on shard_split's train buckets only (the holdout
     entry — so val/test really contain words the tokenizer never saw)."""
-    key = (spark.sparkContext.applicationId, sf_dir, scope)
-    got = _BPE_TRAIN_MEMO.get(key)
-    if got is None:
+
+    def build() -> tuple[DataFrame, list]:
         sym = _bpe_initial_symbols(spark, sf_dir, train_only=scope == "train")
         rows = []
         for k in range(1, BPE_MERGE_ROUNDS + 1):
             sym, left, right, cnt = _bpe_merge_round(sym)
             n_after = sym.agg(F.sum("freq").alias("n")).first()["n"]
             rows.append((k, left, right, cnt, int(n_after)))
-        got = (sym, rows)
-        _BPE_TRAIN_MEMO[key] = got
-    return got
+        return sym, rows
+
+    return memo.cached(spark, "bpe", ("train", sf_dir, scope), build)
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2023,41 +2022,20 @@ SEARCH_TOP_K = 10
 # Memoized retrieval results (the standing search state): the BM25 and
 # keyword result tables feed their own entries, BOTH hybrid fusions, and
 # the Rocchio pseudo-relevance centroid — one checkpointed build per
-# (session, sf_dir), exactly the similarity._RESULT_MEMO pattern. The
-# bench bills the cold builds in its timed `text_search_build` line and
-# clears these memos (clear_search_memos) before every attempt, so
-# nothing is cached across runs and per-entry timings measure marginal
-# cost.
-_SEARCH_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-# (applicationId, sf_dir) -> (qids, cm, cnorm, bc) or None (no BM25
-# top-k doc has an embedding). bc ships (qids, cm, cnorm) to the dense
-# corpus pass — ONE broadcast per session (the _query_block discipline).
-_ROCCHIO_MEMO: dict[tuple[str, str], tuple | None] = {}
-
-
+# (session, sf_dir) in memo group "search", exactly the
+# similarity._memoized pattern. The bench bills the cold builds in its
+# timed `text_search_build` line and clears the group before every
+# attempt, so nothing is cached across runs and per-entry timings
+# measure marginal cost.
 def _search_memoized(tag: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
     from .dedup import _local_checkpoint_stats_clean
 
-    key = (tag, spark.sparkContext.applicationId, sf_dir)
-    got = _SEARCH_MEMO.get(key)
-    if got is None:
-        got = _local_checkpoint_stats_clean(build(), eager=False)
-        _SEARCH_MEMO[key] = got
-    return got
-
-
-def clear_search_memos() -> None:
-    """Destroy the memoized Rocchio broadcast, then drop the search
-    memos (the ADVICE r13 broadcast-lifecycle discipline — see
-    similarity.clear_ann_memos)."""
-    for got in _ROCCHIO_MEMO.values():
-        if got is not None:
-            try:
-                got[3].destroy()
-            except Exception:  # noqa: BLE001 — a dead context must not block the reset
-                pass
-    _ROCCHIO_MEMO.clear()
-    _SEARCH_MEMO.clear()
+    return memo.cached(
+        spark,
+        "search",
+        ("result", tag, sf_dir),
+        lambda: _local_checkpoint_stats_clean(build(), eager=False),
+    )
 
 
 def keyword_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2669,13 +2647,14 @@ def _rocchio_block(spark: SparkSession, sf_dir: str):
     block is deterministic standing state derived from the memoized BM25
     result, so each session pays its bounded |queries|×64 collect and
     its broadcast exactly once. bc ships (qids, cm, cnorm)."""
+    return memo.cached(spark, "search", ("rocchio", sf_dir), lambda: _rocchio_build(spark, sf_dir))
+
+
+def _rocchio_build(spark: SparkSession, sf_dir: str):
     import numpy as np
 
     from .similarity import _emb, _quantized
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ROCCHIO_MEMO:
-        return _ROCCHIO_MEMO[key]
     b = bm25_search_topk(spark, sf_dir).select(
         "query_id", "doc_id", F.col("rank").alias("bm25_rank")
     )
@@ -2690,7 +2669,6 @@ def _rocchio_block(spark: SparkSession, sf_dir: str):
     )
     cpdf = cent.toPandas()  # bounded: |queries| × 64 rows
     if cpdf.empty:
-        _ROCCHIO_MEMO[key] = None
         return None
     qids = np.sort(cpdf["query_id"].unique()).astype(np.int64)
     dims = int(cpdf["pos"].max()) + 1
@@ -2702,9 +2680,7 @@ def _rocchio_block(spark: SparkSession, sf_dir: str):
     ] = cpdf["s"].to_numpy(np.int64)
     cnorm = (cm * cm).sum(axis=1)  # exact int64 (≤ 64·(k·QUANT)² ≈ 2^40)
     bc = spark.sparkContext.broadcast((qids, cm, cnorm))
-    got = (qids, cm, cnorm, bc)
-    _ROCCHIO_MEMO[key] = got
-    return got
+    return qids, cm, cnorm, bc
 
 
 def hybrid_dense_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.timedim import DUCKDB_TIME_ATTRS_SQL, time_attributes
 from ..sources.testdata import load_tables
 
@@ -171,7 +172,6 @@ def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # materializes the star once per (session, sf_dir) via persist() — the
 # local-mode analog of the warehouse's stored Parquet tables; at cluster
 # scale this is a one-time ``saveAsTable`` into bucketed Parquet instead.
-_STAR_CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
 
 def star_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -182,9 +182,8 @@ def star_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     swaps InMemoryRelation into the analyzed plan and ``inputFiles()``
     then reports nothing, which would silently disable size-based plan
     delegation (analysis._local_scan_bytes / q16's onepass routing)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    star = _STAR_CACHE.get(key)
-    if star is None:
+
+    def build() -> dict[str, DataFrame]:
         from .analysis import _local_scan_bytes
 
         star = {}
@@ -193,8 +192,9 @@ def star_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             p = df.persist()
             p._graft_scan_bytes = nbytes  # noqa: SLF001
             star[name] = p
-        _STAR_CACHE[key] = star
-    return star
+        return star
+
+    return memo.cached(spark, "star", (sf_dir,), build)
 
 
 # ---------------------------------------------------------------------------

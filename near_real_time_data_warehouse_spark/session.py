@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import memo
+
 
 def get_spark(app_name: str = "nrtdw_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -137,23 +139,9 @@ def get_spark(app_name: str = "nrtdw_spark", shuffle_partitions: int | None = No
 
 def clear_query_memos() -> None:
     """Drop every session-scoped memoized intermediate (shingle/band/pair
-    tables, component labels, ANN standing state, star tables). Queries
-    rebuild them on next use — this exists so the bench can re-measure a
-    one-time build cold (best-of-N over the SHARED builds, not just the
-    marginal entries) and so long-lived sessions can release checkpoint
-    storage. Not needed for correctness anywhere."""
-    from .operators import clustering, dedup, similarity, text
-    from .plans import star
-
-    dedup._SHINGLE_MEMO.clear()
-    dedup._ARRAYS_MEMO.clear()
-    dedup._SIG_MEMO.clear()
-    dedup._BANDS_MEMO.clear()
-    dedup._PAIRS_MEMO.clear()
-    dedup._COMPONENTS_MEMO.clear()
-    dedup._NEW_PAIRS_MEMO.clear()
-    similarity.clear_ann_memos()  # destroys the query-block broadcasts too
-    text._BPE_TRAIN_MEMO.clear()
-    text.clear_search_memos()  # destroys the Rocchio broadcast too
-    clustering._KMEANS_STATE_MEMO.clear()
-    star._STAR_CACHE.clear()
+    tables, component labels, ANN standing state, star tables) and
+    release their broadcasts and persisted frames. Queries rebuild them
+    on next use — this exists so the bench can re-measure a one-time
+    build cold and so long-lived sessions can release storage. Not needed
+    for correctness anywhere."""
+    memo.clear()

@@ -66,13 +66,6 @@ def write_table(
     writer.save(path)
 
 
-def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **properties) -> None:
-    """JDBC sink parity with the reference's MySQL loader — set-oriented
-    batch inserts instead of row-at-a-time (hybrid_join.py:398-463).
-    Requires the vendor driver jar on the classpath."""
-    df.write.jdbc(url=url, table=table, mode=mode, properties=properties or None)
-
-
 def available_formats(spark: SparkSession) -> dict[str, bool]:
     """Probe which optional formats this runtime can actually load."""
     out = {"parquet": True, "csv": True, "json": True, "orc": True}

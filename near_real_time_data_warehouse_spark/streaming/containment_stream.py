@@ -39,7 +39,7 @@ from ..operators.dedup import (
     _shingle_arrays,
     verified_containment_from_arrays,
 )
-from .fold import drain, overwrite_partitions, parquet_stream, read_state, run_concurrent
+from .fold import overwrite_partitions, read_state, run_concurrent
 
 
 def _verified_pairs(arrs_all: DataFrame, cand: DataFrame) -> DataFrame:
@@ -133,21 +133,4 @@ def read_containment_links(spark: SparkSession, state_dir: str) -> DataFrame:
         read_state(spark, f"{state_dir}/links", _LINKS_SCHEMA)
         .select("doc_a", "doc_b", "n_common", "n_a", "n_b")
         .distinct()
-    )
-
-
-def run_streaming_containment(
-    spark: SparkSession,
-    docs_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available document files (availableNow), folding each
-    micro-batch into the containment state."""
-    drain(
-        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_containment_batch(s, batch, state_dir, epoch_id),
     )

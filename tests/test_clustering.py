@@ -14,7 +14,6 @@ import hashlib
 import numpy as np
 import pytest
 
-from near_real_time_data_warehouse_spark.operators import clustering
 from near_real_time_data_warehouse_spark.operators.clustering import (
     EMB_DIM,
     K_CLUSTERS,
@@ -160,12 +159,13 @@ def test_round_half_away_parity():
 
 
 def test_state_memo_cleared_by_session_hook(spark):
+    from near_real_time_data_warehouse_spark import memo
     from near_real_time_data_warehouse_spark.session import clear_query_memos
 
     _trained_state(spark, SF_SMALL)
-    assert clustering._KMEANS_STATE_MEMO
+    assert any(k[0] == "kmeans" for k in memo._ENTRIES)
     clear_query_memos()
-    assert not clustering._KMEANS_STATE_MEMO
+    assert not any(k[0] == "kmeans" for k in memo._ENTRIES)
 
 
 def test_round_half_away_half_ulp_boundary():

@@ -760,13 +760,11 @@ def test_unified_array_sketch_derivations_match_direct_builds(spark):
     array verify must be bit-equal to the direct builds they replaced."""
     from pyspark.sql import functions as F
 
+    from near_real_time_data_warehouse_spark import memo
     from near_real_time_data_warehouse_spark.operators import dedup as dd
 
     sf = "/root/testdata/sf0.001"
-    dd._ARRAYS_MEMO.clear()
-    dd._SHINGLE_MEMO.clear()
-    dd._SIG_MEMO.clear()
-    dd._BANDS_MEMO.clear()
+    memo.clear("dedup")
     docs = dd._docs(spark, sf).select("doc_id", "text")
 
     # 1. derived exploded form == direct exploded build
