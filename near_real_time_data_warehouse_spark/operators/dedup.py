@@ -729,6 +729,21 @@ def _cc_driver_resolve(
     return [(v, comp_min[find(v) if v in parent else v]) for v, _ in seeds]
 
 
+def _endpoint_frame(spark: SparkSession, ids) -> DataFrame:
+    """The distinct ``ids`` as a broadcast local ``doc_id long`` relation:
+    the driver-collected endpoint set a bounded semi/anti probe joins
+    against, instead of an edges-lineage scan + distinct exchange."""
+    import pandas as pd
+
+    ep_ids = sorted(set(ids))
+    return F.broadcast(
+        spark.createDataFrame(
+            pd.DataFrame({"doc_id": pd.Series(ep_ids, dtype="int64")}),
+            "doc_id long",
+        )
+    )
+
+
 def connected_components(
     vertices: DataFrame, edges: DataFrame, max_iterations: int = 60
 ) -> DataFrame:
@@ -802,16 +817,8 @@ def connected_components(
         # fetch and every consumer's passive leg then probe a broadcast
         # LOCAL relation (bounded ≤ 2·CC_COLLECT_CAP rows) instead of
         # re-running an edges-lineage scan + distinct exchange per action.
-        import pandas as pd
-
         spark = vertices.sparkSession
-        ep_ids = sorted({e for r in taken for e in (r.src, r.dst)})
-        ep = F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame({"doc_id": pd.Series(ep_ids, dtype="int64")}),
-                "doc_id long",
-            )
-        )
+        ep = _endpoint_frame(spark, (e for r in taken for e in (r.src, r.dst)))
         seed_rows = seeds.join(ep, "doc_id", "left_semi").collect()
         resolved_rows = _cc_driver_resolve(
             [(r.src, r.dst) for r in taken],
@@ -1695,15 +1702,7 @@ def merge_components_with_edges(current: DataFrame, new_pairs: DataFrame) -> Dat
     # same DSU).
     pair_rows = new_pairs.select("doc_a", "doc_b").take(QUOTIENT_COLLECT_CAP + 1)
     if len(pair_rows) <= QUOTIENT_COLLECT_CAP:
-        import pandas as pd
-
-        ep_ids = sorted({e for r in pair_rows for e in (r.doc_a, r.doc_b)})
-        ep = F.broadcast(
-            spark.createDataFrame(
-                pd.DataFrame({"doc_id": pd.Series(ep_ids, dtype="int64")}),
-                "doc_id long",
-            )
-        )
+        ep = _endpoint_frame(spark, (e for r in pair_rows for e in (r.doc_a, r.doc_b)))
         lab = {
             r["doc_id"]: r["label"]
             for r in current.join(ep, "doc_id", "left_semi").collect()

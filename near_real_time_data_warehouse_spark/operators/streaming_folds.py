@@ -38,6 +38,8 @@ import atexit
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -72,6 +74,22 @@ def _fresh_state(name: str) -> str:
     return path
 
 
+def _play(
+    spark: SparkSession,
+    name: str,
+    merge: Callable[..., object],
+    frame: DataFrame,
+    key: str,
+) -> tuple[str, object]:
+    """Fold ``frame`` through ``merge`` into ``_fresh_state(name)`` as two
+    epochs: the even-``key`` rows as epoch 0, the odd ones as epoch 1.
+    Returns (state dir, epoch 1's merge output)."""
+    state = _fresh_state(name)
+    merge(spark, frame.filter(F.col(key) % 2 == 0), state_dir=state, epoch_id=0)
+    out = merge(spark, frame.filter(F.col(key) % 2 == 1), state_dir=state, epoch_id=1)
+    return state, out
+
+
 def stream_bm25_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-epoch playback of the streaming BM25 ingestion router
     (streaming/bm25_stream.py): even docs fold in as the cold-start
@@ -84,13 +102,7 @@ def stream_bm25_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.bm25_stream import SCORE_SCHEMA, merge_bm25_batch
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    state = _fresh_state("bm25")
-    merge_bm25_batch(
-        spark, docs.filter(F.col("doc_id") % 2 == 0), state, epoch_id=0
-    )
-    out = merge_bm25_batch(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), state, epoch_id=1
-    )
+    _state, out = _play(spark, "bm25", merge_bm25_batch, docs, "doc_id")
     if out is None:
         return spark.createDataFrame([], SCORE_SCHEMA)
     return out
@@ -111,11 +123,7 @@ def stream_pca_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pca_stream import SCORE_SCHEMA, merge_pca_batch
 
     e = _emb(spark, sf_dir).select("vec_id", "embedding", "label")
-    state = _fresh_state("pca")
-    merge_pca_batch(spark, e.filter(F.col("vec_id") % 2 == 0), state, epoch_id=0)
-    out = merge_pca_batch(
-        spark, e.filter(F.col("vec_id") % 2 == 1), state, epoch_id=1
-    )
+    _state, out = _play(spark, "pca", merge_pca_batch, e, "vec_id")
     if out is None:
         return spark.createDataFrame([], SCORE_SCHEMA)
     return out
@@ -134,13 +142,7 @@ def stream_dsir_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.dsir_stream import SCORE_SCHEMA, merge_dsir_batch
 
     docs = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    state = _fresh_state("dsir")
-    merge_dsir_batch(
-        spark, docs.filter(F.col("doc_id") % 2 == 0), state, epoch_id=0
-    )
-    out = merge_dsir_batch(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), state, epoch_id=1
-    )
+    _state, out = _play(spark, "dsir", merge_dsir_batch, docs, "doc_id")
     if out is None:
         return spark.createDataFrame([], SCORE_SCHEMA)
     return out
@@ -162,9 +164,7 @@ def stream_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.kmeans_stream import merge_kmeans_batch, read_kmeans_state
 
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    state = _fresh_state("kmeans")
-    merge_kmeans_batch(spark, e.filter(F.col("vec_id") % 2 == 0), state, epoch_id=0)
-    merge_kmeans_batch(spark, e.filter(F.col("vec_id") % 2 == 1), state, epoch_id=1)
+    state, _ = _play(spark, "kmeans", merge_kmeans_batch, e, "vec_id")
     return read_kmeans_state(spark, state)
 
 
@@ -183,9 +183,7 @@ def stream_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.semdedup_stream import merge_semdedup_batch, read_semdedup_pairs
 
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    state = _fresh_state("semdedup")
-    merge_semdedup_batch(spark, e.filter(F.col("vec_id") % 2 == 0), state, epoch_id=0)
-    merge_semdedup_batch(spark, e.filter(F.col("vec_id") % 2 == 1), state, epoch_id=1)
+    state, _ = _play(spark, "semdedup", merge_semdedup_batch, e, "vec_id")
     return read_semdedup_pairs(spark, state)
 
 
@@ -204,11 +202,7 @@ def stream_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.dedup_stream import merge_dedup_batch
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    state = _fresh_state("dedup")
-    merge_dedup_batch(spark, docs.filter(F.col("doc_id") % 2 == 0), state, epoch_id=0)
-    out = merge_dedup_batch(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), state, epoch_id=1
-    )
+    _state, out = _play(spark, "dedup", merge_dedup_batch, docs, "doc_id")
     if out is None:
         return spark.createDataFrame([], "doc_a long, doc_b long")
     return out
@@ -232,13 +226,8 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    state = _fresh_state("quality")
-    merge_quality_batch(
-        spark, li.filter(F.col("l_orderkey") % 2 == 0), orders, state, epoch_id=0
-    )
-    merge_quality_batch(
-        spark, li.filter(F.col("l_orderkey") % 2 == 1), orders, state, epoch_id=1
-    )
+    merge = partial(merge_quality_batch, orders=orders)
+    state, _ = _play(spark, "quality", merge, li, "l_orderkey")
     return read_quality_state(spark, state, orders)
 
 
@@ -262,13 +251,7 @@ def stream_containment_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    state = _fresh_state("containment")
-    merge_containment_batch(
-        spark, docs.filter(F.col("doc_id") % 2 == 0), state, epoch_id=0
-    )
-    merge_containment_batch(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), state, epoch_id=1
-    )
+    state, _ = _play(spark, "containment", merge_containment_batch, docs, "doc_id")
     return read_containment_links(spark, state)
 
 
@@ -287,9 +270,7 @@ def stream_ivf_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ivf_stream import merge_ivf_batch, read_ivf_state
 
     e = _emb(spark, sf_dir).select("vec_id", "embedding")
-    state = _fresh_state("ivf")
-    merge_ivf_batch(spark, e.filter(F.col("vec_id") % 2 == 0), state, epoch_id=0)
-    merge_ivf_batch(spark, e.filter(F.col("vec_id") % 2 == 1), state, epoch_id=1)
+    state, _ = _play(spark, "ivf", merge_ivf_batch, e, "vec_id")
     return read_ivf_state(spark, state)
 
 
@@ -310,13 +291,7 @@ def stream_linkage_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.linkage_stream import merge_linkage_batch, read_linkage_state
 
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
-    state = _fresh_state("linkage")
-    merge_linkage_batch(
-        spark, p.filter(F.col("p_partkey") % 2 == 0), state, epoch_id=0
-    )
-    merge_linkage_batch(
-        spark, p.filter(F.col("p_partkey") % 2 == 1), state, epoch_id=1
-    )
+    state, _ = _play(spark, "linkage", merge_linkage_batch, p, "p_partkey")
     _names, links = read_linkage_state(spark, state)
     return links
 

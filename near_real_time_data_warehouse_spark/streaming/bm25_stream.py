@@ -27,10 +27,9 @@ from pyspark.sql import functions as F
 
 from ..operators.text import bm25_batch_tfdl, bm25_score_with_stats
 from .fold import (
-    drain,
     overwrite_partitions,
-    parquet_stream,
     read_epoch,
+    read_standing,
     read_state,
     run_concurrent,
 )
@@ -48,23 +47,13 @@ def merge_bm25_batch(
     state at ``state_dir`` ({df,totals,scores} parquet). Returns the
     batch's per-query top-k routing — or None for an empty / cold-start
     batch."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return None
     tfdl = bm25_batch_tfdl(batch).localCheckpoint(eager=True)
     df_dir, tot_dir = f"{state_dir}/df", f"{state_dir}/totals"
     scores_dir = f"{state_dir}/scores"
-
-    def standing(path: str) -> DataFrame | None:
-        if not path_exists(spark, path):
-            return None
-        return spark.read.parquet(path).filter(F.col("_epoch") != epoch_id).drop(
-            "_epoch"
-        )
-
-    st_df = standing(df_dir)
-    st_tot = standing(tot_dir)
+    st_df = read_standing(spark, df_dir, epoch_id)
+    st_tot = read_standing(spark, tot_dir, epoch_id)
     scores = None
     if st_df is not None and st_tot is not None and not st_tot.isEmpty():
         df_st = st_df.groupBy("term").agg(F.sum("df").alias("df"))
@@ -108,19 +97,3 @@ def read_bm25_scores(spark: SparkSession, state_dir: str) -> DataFrame:
     """All routed batches so far (per-epoch per-query top-k)."""
     return read_state(spark, f"{state_dir}/scores", SCORE_SCHEMA + ", _epoch int")
 
-
-def run_streaming_bm25(
-    spark: SparkSession,
-    docs_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available document files (availableNow), folding each
-    micro-batch through the BM25 router."""
-    drain(
-        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_bm25_batch(s, batch, state_dir, epoch_id),
-    )

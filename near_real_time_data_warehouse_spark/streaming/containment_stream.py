@@ -39,7 +39,7 @@ from ..operators.dedup import (
     _shingle_arrays,
     verified_containment_from_arrays,
 )
-from .fold import overwrite_partitions, read_state, run_concurrent
+from .fold import overwrite_partitions, read_standing, read_state, run_concurrent
 
 
 def _verified_pairs(arrs_all: DataFrame, cand: DataFrame) -> DataFrame:
@@ -60,8 +60,6 @@ def merge_containment_batch(
     from them scan-side, and verification is the fused array kernel —
     one tokenize pass, one corpus-side materialization, and a doc-level
     verify instead of the exploded five-stage chain (VERDICT r13 #2)."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return
     sh_dir = f"{state_dir}/shingles"
@@ -69,11 +67,10 @@ def merge_containment_batch(
 
     arrs = _shingle_arrays(batch.select("doc_id", "text")).localCheckpoint(eager=True)
 
-    if path_exists(spark, sh_dir):
+    standing = read_standing(spark, sh_dir, epoch_id)  # replay: never self-pair
+    if standing is not None:
         state_arrs = (
-            spark.read.parquet(sh_dir)
-            .filter(F.col("_epoch") != epoch_id)  # replay: never self-pair
-            .select("doc_id", "arr", "n")
+            standing.select("doc_id", "arr", "n")
             # replay may re-deliver docs already in older epochs too
             .join(arrs.select("doc_id").distinct(), "doc_id", "left_anti")
         )

@@ -33,7 +33,8 @@ from ..operators.dedup import (
     connected_components,
     merge_components_with_edges,
 )
-from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
+from ..sources.maintenance import path_exists
+from .fold import overwrite_partitions, run_concurrent
 
 
 def merge_dedup_batch(
@@ -44,8 +45,6 @@ def merge_dedup_batch(
     Returns the batch's verified new pairs (doc_a, doc_b) — the delta the
     diagnostics fold (diagnostics_stream.py) consumes — or None for an
     empty batch."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return None
     sh_dir = f"{state_dir}/shingles"
@@ -138,19 +137,3 @@ def merge_dedup_batch(
     )
     return new_pairs
 
-
-def run_streaming_dedup(
-    spark: SparkSession,
-    docs_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available document files (availableNow), folding each
-    micro-batch into the dedup graph state."""
-    drain(
-        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_dedup_batch(s, batch, state_dir, epoch_id),
-    )

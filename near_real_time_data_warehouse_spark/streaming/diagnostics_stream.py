@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import PR_BASE, pagerank_stats, triangle_stats
 from .dedup_stream import merge_dedup_batch
-from .fold import drain, overwrite_partitions, parquet_stream, read_state
+from .fold import overwrite_partitions, read_state
 
 _TRI_SCHEMA = "doc_id long, degree long, n_triangles long, clustering_coeff double"
 _PR_SCHEMA = "doc_id long, degree long, rank long"
@@ -126,19 +126,3 @@ def read_diagnostics_state(
     )
     return tri, stored_pr.unionByName(passive)
 
-
-def run_streaming_diagnostics(
-    spark: SparkSession,
-    docs_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available document files (availableNow), folding each
-    micro-batch into the dedup graph + diagnostics state."""
-    drain(
-        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_diagnostics_batch(s, batch, state_dir, epoch_id),
-    )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.scd import scd2_apply_increment, scd2_versions
+from ..sources.maintenance import path_exists
 from .fold import drain, overwrite_partitions, parquet_stream
 
 N_BUCKETS = 16
@@ -44,8 +45,6 @@ def _merge_batch(
     changes_dir: str | None = None,
     epoch_id: int = 0,
 ) -> None:
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():  # file sources can deliver marker-only batches
         return
     # Hadoop-FS probe, not os.path: on HDFS/S3A warehouses a local-path

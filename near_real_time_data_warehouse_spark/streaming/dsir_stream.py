@@ -26,10 +26,9 @@ from pyspark.sql import functions as F
 
 from ..operators.text import dsir_fx, dsir_score_with_stats
 from .fold import (
-    drain,
     overwrite_partitions,
-    parquet_stream,
     read_epoch,
+    read_standing,
     read_state,
     run_concurrent,
 )
@@ -43,23 +42,14 @@ def merge_dsir_batch(
     """Fold one document batch (doc_id, lang, text) into the DSIR state
     at ``state_dir`` ({stats,langs,scores} parquet). Returns the batch's
     scores — or None for an empty batch."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return None
     batch = batch.select("doc_id", "lang", "text").localCheckpoint(eager=True)
     fx = dsir_fx(batch).localCheckpoint(eager=True)
     stats_dir, langs_dir = f"{state_dir}/stats", f"{state_dir}/langs"
     scores_dir = f"{state_dir}/scores"
-
-    def standing(path: str) -> DataFrame | None:
-        if not path_exists(spark, path):
-            return None
-        df = spark.read.parquet(path).filter(F.col("_epoch") != epoch_id)
-        return df.drop("_epoch")
-
-    st = standing(stats_dir)
-    lt = standing(langs_dir)
+    st = read_standing(spark, stats_dir, epoch_id)
+    lt = read_standing(spark, langs_dir, epoch_id)
     if st is None or lt is None or lt.isEmpty():
         scores = batch.join(
             fx.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_features")),
@@ -113,19 +103,3 @@ def read_dsir_scores(spark: SparkSession, state_dir: str) -> DataFrame:
     """All scored batches so far (doc_id, n_features, score_bits, epoch)."""
     return read_state(spark, f"{state_dir}/scores", SCORE_SCHEMA + ", _epoch int")
 
-
-def run_streaming_dsir(
-    spark: SparkSession,
-    docs_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available document files (availableNow), folding each
-    micro-batch through the DSIR screen."""
-    drain(
-        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_dsir_batch(s, batch, state_dir, epoch_id),
-    )

@@ -59,6 +59,29 @@ def drain(
     )
 
 
+def run_fold(
+    spark: SparkSession,
+    merge: Callable[..., object],
+    source_dir: str,
+    schema,
+    state_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int = 1,
+) -> None:
+    """Drain the parquet files available under ``source_dir``
+    (availableNow), folding each micro-batch into ``state_dir`` with
+    ``merge(spark, batch, state_dir=state_dir, epoch_id=epoch_id)``.
+    ``state_dir`` and ``epoch_id`` go by keyword, so a fold with further
+    inputs binds them with ``functools.partial``."""
+    drain(
+        parquet_stream(spark, source_dir, schema, max_files_per_trigger),
+        checkpoint_dir,
+        lambda s, batch, epoch_id: merge(
+            s, batch, state_dir=state_dir, epoch_id=epoch_id
+        ),
+    )
+
+
 def overwrite_partitions(
     df: DataFrame, out_dir: str, *partition_cols: str, epoch_id: int | None = None
 ) -> None:
@@ -131,6 +154,16 @@ def read_epoch(
         )
     except AnalysisException:
         return spark.createDataFrame([], schema)
+
+
+def read_standing(spark: SparkSession, path: str, epoch_id: int) -> DataFrame | None:
+    """The standing side of an ``_epoch``-partitioned state dir: every
+    OTHER epoch's rows, ``_epoch`` dropped — so a replayed epoch sees
+    exactly the state its first delivery saw and never pairs with
+    itself. None when the dir does not exist yet (cold start)."""
+    if not path_exists(spark, path):
+        return None
+    return spark.read.parquet(path).filter(F.col("_epoch") != epoch_id).drop("_epoch")
 
 
 def read_state(spark: SparkSession, path: str, schema: str) -> DataFrame:

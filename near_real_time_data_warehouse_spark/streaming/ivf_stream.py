@@ -26,10 +26,10 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.similarity import _assign_lists, _train_centroids_on_sample
-from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
+from ..sources.maintenance import path_exists
+from .fold import overwrite_partitions, run_concurrent
 
 
 def _save_centroids(spark: SparkSession, cmat: np.ndarray, path: str) -> None:
@@ -61,8 +61,6 @@ def merge_ivf_batch(
     IVF state at ``state_dir``. First batch trains the centroids
     (bounded sample); every batch — including the first — is assigned
     against the stored state at cost ∝ batch."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return
     cent_dir = f"{state_dir}/centroids"
@@ -96,19 +94,3 @@ def read_ivf_state(spark: SparkSession, state_dir: str) -> DataFrame:
         "neighbor_id", "centroid"
     )
 
-
-def run_streaming_ivf(
-    spark: SparkSession,
-    emb_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available embedding files (availableNow), folding each
-    micro-batch into the IVF index state."""
-    drain(
-        parquet_stream(spark, emb_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_ivf_batch(s, batch, state_dir, epoch_id),
-    )

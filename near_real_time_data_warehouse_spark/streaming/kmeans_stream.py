@@ -28,7 +28,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.clustering import _assign_frame, _train_state_on
-from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
+from ..sources.maintenance import path_exists
+from .fold import overwrite_partitions, run_concurrent
 
 
 def _save_state(
@@ -64,8 +65,6 @@ def merge_kmeans_batch(
     domain state. First batch trains the centroids (full exact Lloyd
     loop on that batch — the standing corpus); every batch, including
     the first, is assigned against the stored state at cost ∝ batch."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return
     cent_dir = f"{state_dir}/centroids"
@@ -100,19 +99,3 @@ def read_kmeans_state(spark: SparkSession, state_dir: str) -> DataFrame:
         "vec_id", "cluster_id", "dist_sq"
     )
 
-
-def run_streaming_kmeans(
-    spark: SparkSession,
-    emb_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available embedding files (availableNow), folding each
-    micro-batch into the domain state."""
-    drain(
-        parquet_stream(spark, emb_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_kmeans_batch(s, batch, state_dir, epoch_id),
-    )

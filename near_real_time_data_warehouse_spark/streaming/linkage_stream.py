@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.linkage import blocked_levenshtein_pairs, with_block
-from .fold import drain, overwrite_partitions, parquet_stream, read_state
+from .fold import overwrite_partitions, read_standing, read_state
 
 
 def _batch_names(batch: DataFrame) -> DataFrame:
@@ -41,8 +41,6 @@ def merge_linkage_batch(
 ) -> None:
     """Fold one entity batch (p_partkey, p_name) into the persisted
     linkage state at ``state_dir`` ({names,links} parquet)."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return
     names_dir = f"{state_dir}/names"
@@ -50,13 +48,9 @@ def merge_linkage_batch(
 
     bn = _batch_names(batch.select("p_name")).localCheckpoint(eager=True)
 
-    if path_exists(spark, names_dir):
-        state_names = (
-            spark.read.parquet(names_dir)
-            .filter(F.col("_epoch") != epoch_id)  # replay: never self-pair
-            .select("p_name", "block")
-            .distinct()
-        )
+    standing = read_standing(spark, names_dir, epoch_id)  # replay: never self-pair
+    if standing is not None:
+        state_names = standing.select("p_name", "block").distinct()
         links = blocked_levenshtein_pairs(
             bn, state_names.unionByName(bn.select("p_name", "block"))
         )
@@ -89,19 +83,3 @@ def read_linkage_state(spark: SparkSession, state_dir: str) -> tuple[DataFrame, 
     )
     return names, links
 
-
-def run_streaming_linkage(
-    spark: SparkSession,
-    parts_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available part files (availableNow), folding each
-    micro-batch into the linkage state."""
-    drain(
-        parquet_stream(spark, parts_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_linkage_batch(s, batch, state_dir, epoch_id),
-    )

@@ -36,10 +36,9 @@ from ..operators.similarity import (
     _quantized,
 )
 from .fold import (
-    drain,
     overwrite_partitions,
-    parquet_stream,
     read_epoch,
+    read_standing,
     read_state,
     run_concurrent,
 )
@@ -79,23 +78,20 @@ def merge_pca_batch(
     state at ``state_dir`` ({gram,scores} parquet). Returns the batch's
     projections onto the refreshed top component — None for an empty
     batch."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return None
     batch = batch.select("vec_id", "embedding", "label").localCheckpoint(
         eager=True
     )
     gram_dir, scores_dir = f"{state_dir}/gram", f"{state_dir}/scores"
-    if path_exists(spark, gram_dir):
+    standing = read_standing(spark, gram_dir, epoch_id)
+    if standing is not None:
         # the batch's Gram reduction and the standing-state merge are
         # independent Spark jobs (checkpointed batch vs. gram parquet) —
         # collect them concurrently so the second doesn't queue behind
         # the first's stage tail (§2.6; both are 2080-row bounded)
         standing = (
-            spark.read.parquet(gram_dir)
-            .filter(F.col("_epoch") != epoch_id)
-            .groupBy("i", "j")
+            standing.groupBy("i", "j")
             .agg(
                 F.sum("n").alias("n"),
                 F.sum("sum_i").alias("sum_i"),
@@ -148,19 +144,3 @@ def read_pca_scores(spark: SparkSession, state_dir: str) -> DataFrame:
     """All projected batches so far (vec_id, label, proj_num, proj, epoch)."""
     return read_state(spark, f"{state_dir}/scores", SCORE_SCHEMA + ", _epoch int")
 
-
-def run_streaming_pca(
-    spark: SparkSession,
-    vec_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available vector files (availableNow), folding each
-    micro-batch through the PCA maintenance."""
-    drain(
-        parquet_stream(spark, vec_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_pca_batch(s, batch, state_dir, epoch_id),
-    )

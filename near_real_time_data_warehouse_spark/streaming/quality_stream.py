@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
+from .fold import overwrite_partitions, run_concurrent
 
 _PRED_RULES = (
     "l_quantity_between_1_50",
@@ -159,20 +159,3 @@ def read_quality_state(
     )
     return rules.unionByName(pk).unionByName(parent)
 
-
-def run_streaming_quality(
-    spark: SparkSession,
-    lineitem_dir: str,
-    schema,
-    orders: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available lineitem files (availableNow), folding each
-    micro-batch into the quality state."""
-    drain(
-        parquet_stream(spark, lineitem_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_quality_batch(s, batch, orders, state_dir, epoch_id),
-    )

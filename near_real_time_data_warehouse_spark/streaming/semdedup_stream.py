@@ -28,8 +28,6 @@ pair set is bit-equal to the batch twin — tested.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -43,7 +41,8 @@ from ..operators.clustering import (
     _train_state_on,
 )
 from ..operators.similarity import _quant_np
-from .fold import drain, overwrite_partitions, parquet_stream, run_concurrent
+from ..sources.maintenance import path_exists
+from .fold import overwrite_partitions, read_standing, run_concurrent
 from .kmeans_stream import _load_state, _save_state
 
 _PAIR_SCHEMA = "vec_a long, vec_b long, cluster_id long, cosine double"
@@ -57,8 +56,6 @@ def merge_semdedup_batch(
     loop on that batch); every batch is assigned against the stored
     state, paired against its clusters' standing members plus itself,
     and appended to the member store."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return
     cent_dir = f"{state_dir}/centroids"
@@ -82,7 +79,8 @@ def merge_semdedup_batch(
     ).localCheckpoint(eager=True)
 
     new_flagged = assigned.withColumn("is_new", F.lit(True))
-    if path_exists(spark, mem_dir):
+    standing = read_standing(spark, mem_dir, epoch_id)
+    if standing is not None:
         # the touched-cluster list is only needed to prune the standing
         # member read — on cold start (no members yet) skip its collect
         touched = [
@@ -90,8 +88,7 @@ def merge_semdedup_batch(
             for r in assigned.select("cluster_id").distinct().collect()
         ]
         old = (
-            spark.read.parquet(mem_dir)
-            .filter(F.col("cluster_id").isin(touched) & (F.col("_epoch") != epoch_id))
+            standing.filter(F.col("cluster_id").isin(touched))
             .select("cluster_id", "vec_id", "embedding")
             .withColumn("is_new", F.lit(False))
         )
@@ -253,19 +250,3 @@ def read_semdedup_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
         "vec_a", "vec_b", "cluster_id", "cosine"
     )
 
-
-def run_streaming_semdedup(
-    spark: SparkSession,
-    emb_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available embedding files (availableNow), folding each
-    micro-batch into the SemDedup state."""
-    drain(
-        parquet_stream(spark, emb_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_semdedup_batch(s, batch, state_dir, epoch_id),
-    )

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _positional_shingles, _spans_profile, substring_spans_df
-from .fold import drain, overwrite_partitions, parquet_stream, read_state
+from ..sources.maintenance import path_exists
+from .fold import overwrite_partitions, read_state
 
 
 def merge_substring_batch(
@@ -36,8 +37,6 @@ def merge_substring_batch(
     substring-dedup state at ``state_dir`` ({winhashes,profile} parquet).
     Returns the re-profiled docs' span rows (batch + touched old docs) —
     or None for an empty batch."""
-    from ..sources.maintenance import path_exists
-
     if batch.isEmpty():
         return None
     sh_dir = f"{state_dir}/winhashes"
@@ -99,19 +98,3 @@ def read_substring_profile(spark: SparkSession, state_dir: str) -> DataFrame:
         "longest_span int, dup_fraction double",
     )
 
-
-def run_streaming_substring(
-    spark: SparkSession,
-    docs_dir: str,
-    schema,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-) -> None:
-    """Drain the available document files (availableNow), folding each
-    micro-batch into the substring-dedup state."""
-    drain(
-        parquet_stream(spark, docs_dir, schema, max_files_per_trigger),
-        checkpoint_dir,
-        lambda s, batch, epoch_id: merge_substring_batch(s, batch, state_dir, epoch_id),
-    )

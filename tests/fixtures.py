@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import csv
+import os
 import random
+import time
 from pathlib import Path
 
 AGE_BUCKETS = ["0-17", "18-25", "26-35", "36-45", "46-50", "51-55", "55+"]
@@ -70,6 +72,20 @@ def write_fixture_csvs(
                 w.writerow([oid, cid, pid, f"{month}/{day}/{year}", rng.randrange(1, 11)])
 
     return {"customer": cust_path, "product": prod_path, "transactions": txn_dir}
+
+
+def land_batches(frames, src_dir) -> None:
+    """Land each frame as one parquet file under ``src_dir/part<i>``, in
+    list order. The streaming file source orders its input by
+    modification time, so each file is stamped with a strictly
+    increasing past mtime (one second apart) instead of sleeping between
+    writes."""
+    start = int(time.time()) - len(frames) - 1
+    for i, frame in enumerate(frames):
+        part = Path(src_dir) / f"part{i}"
+        frame.coalesce(1).write.parquet(str(part))
+        for f in part.iterdir():
+            os.utime(f, (start + i, start + i))
 
 
 def shard_split_frame(spark, sf_dir):

@@ -89,3 +89,59 @@ def test_no_module_imports_private_dedup_stream_names():
             ):
                 offenders.append(p.name)
     assert offenders == []
+
+
+def _compares_epoch_unequal(tree: ast.Module) -> bool:
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Compare) and any(
+            isinstance(op, ast.NotEq) for op in n.ops
+        ):
+            operands = [n.left, *n.comparators]
+            if any(
+                isinstance(c, ast.Constant) and c.value == "_epoch"
+                for o in operands
+                for c in ast.walk(o)
+            ):
+                return True
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if "_epoch !=" in n.value or "_epoch <>" in n.value:
+                return True
+    return False
+
+
+def test_only_fold_reads_the_standing_side():
+    """Every "all epochs but this one" read goes through
+    ``fold.read_standing``."""
+    offenders = [
+        str(p.relative_to(ROOT))
+        for p, tree in _modules()
+        if p != FOLD and _compares_epoch_unequal(tree)
+    ]
+    assert offenders == []
+
+
+# Beside fold.py, the multi-argument sinks: each drains its own stream
+# because its sink takes more than (batch, state_dir, epoch_id) — the
+# SCD2 dimension's key/ts/attr/tie columns and optional current/change
+# dirs, the rollup's hour and day tables, the snapshot sink's merge key
+# and match mode. Every fold runs through ``fold.run_fold``.
+PARQUET_STREAM_CALLERS = {
+    "streaming/fold.py",
+    "streaming/dimensions.py",
+    "streaming/rollup.py",
+    "sources/snapshots.py",
+}
+
+
+def test_parquet_stream_is_opened_only_by_the_runner_and_multi_argument_sinks():
+    callers = {
+        str(p.relative_to(ROOT))
+        for p, tree in _modules()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and (
+            getattr(n.func, "id", None) == "parquet_stream"
+            or getattr(n.func, "attr", None) == "parquet_stream"
+        )
+    }
+    assert callers <= PARQUET_STREAM_CALLERS, callers - PARQUET_STREAM_CALLERS

@@ -8,8 +8,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators import text as T
 from near_real_time_data_warehouse_spark.streaming import bm25_stream as bs
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _rows(df):
@@ -65,18 +67,15 @@ def test_streaming_bm25_routes_match_batch_kernel(spark, tmp_path_factory):
 
 
 def test_streaming_bm25_drain_and_replay(spark, tmp_path_factory):
-    import time as _time
-
     base = tmp_path_factory.mktemp("bm25_drain")
     docs, batches = _doc_batches(spark, [(0, 250), (250, 10**9)])
     src = base / "stream"
     src.mkdir()
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(batches, src)
     state = str(base / "ckpt_src")
-    bs.run_streaming_bm25(
-        spark, f"{src}/*", docs.schema, state, str(base / "ckpt")
+    run_fold(
+        spark, bs.merge_bm25_batch, f"{src}/*", docs.schema, state,
+        str(base / "ckpt"),
     )
     drained = bs.read_bm25_scores(spark, state)
     assert drained.count() > 0

@@ -7,8 +7,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators import dedup
 from near_real_time_data_warehouse_spark.streaming import dedup_stream as ds
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _labels_set(df):
@@ -20,17 +22,18 @@ def test_streaming_dedup_equals_batch_build(spark, tmp_path_factory):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select("doc_id", "text")
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
-    for i, (lo, hi) in enumerate([(0, 170), (170, 340), (340, 10**9)]):
-        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
-            1
-        ).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(
+        [
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            for lo, hi in [(0, 170), (170, 340), (340, 10**9)]
+        ],
+        src,
+    )
 
     state = str(base / "state")
-    ds.run_streaming_dedup(
-        spark, f"{src}/*", docs.schema, state, str(base / "ckpt")
+    run_fold(
+        spark, ds.merge_dedup_batch, f"{src}/*", docs.schema, state,
+        str(base / "ckpt"),
     )
     got = _labels_set(spark.read.parquet(f"{state}/labels"))
     want = _labels_set(dedup.dedup_components_minhash(spark, SF_SMALL))

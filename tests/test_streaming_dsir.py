@@ -8,8 +8,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators import text as T
 from near_real_time_data_warehouse_spark.streaming import dsir_stream as ds
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _rows(df):
@@ -73,18 +75,15 @@ def test_streaming_dsir_scores_match_batch_kernel(spark, tmp_path_factory):
 
 
 def test_streaming_dsir_drain_and_replay(spark, tmp_path_factory):
-    import time as _time
-
     base = tmp_path_factory.mktemp("dsir_drain")
     docs, batches = _doc_batches(spark, [(0, 250), (250, 10**9)])
     src = base / "stream"
     src.mkdir()
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(batches, src)
     state = str(base / "state")
-    ds.run_streaming_dsir(
-        spark, f"{src}/*", docs.schema, state, str(base / "ckpt")
+    run_fold(
+        spark, ds.merge_dsir_batch, f"{src}/*", docs.schema, state,
+        str(base / "ckpt"),
     )
     drained = ds.read_dsir_scores(spark, state)
     assert drained.select("doc_id").distinct().count() == docs.count()

@@ -9,8 +9,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators import similarity as S
 from near_real_time_data_warehouse_spark.streaming import ivf_stream as ivs
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _assign_set(df):
@@ -38,20 +40,20 @@ def test_streaming_ivf_equals_batch_incremental(spark, tmp_path_factory):
     )
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
     # file 0 = the standing corpus (trains the centroids), later files =
     # arriving batches folded against the stored state
     splits = [(0, S.IVF_INCR_SPLIT), (S.IVF_INCR_SPLIT, S.IVF_INCR_SPLIT + 50),
               (S.IVF_INCR_SPLIT + 50, 10**9)]
-    for i, (lo, hi) in enumerate(splits):
-        emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).coalesce(
-            1
-        ).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(
+        [emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)) for lo, hi in splits],
+        src,
+    )
 
     state = str(base / "state")
-    ivs.run_streaming_ivf(spark, f"{src}/*", emb.schema, state, str(base / "ckpt"))
+    run_fold(
+        spark, ivs.merge_ivf_batch, f"{src}/*", emb.schema, state,
+        str(base / "ckpt"),
+    )
 
     cmat_want, want = _batch_grown_assignments(spark)
     cmat_got = ivs._load_centroids(spark, f"{state}/centroids")

@@ -9,8 +9,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators import clustering as C
 from near_real_time_data_warehouse_spark.streaming import kmeans_stream as ks
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 _SPLIT = 400  # standing corpus trains; later vec_ids arrive as batches
 
@@ -37,17 +39,17 @@ def test_streaming_kmeans_equals_batch(spark, tmp_path_factory):
     )
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
     splits = [(0, _SPLIT), (_SPLIT, _SPLIT + 50), (_SPLIT + 50, 10**9)]
-    for i, (lo, hi) in enumerate(splits):
-        emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).coalesce(
-            1
-        ).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(
+        [emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)) for lo, hi in splits],
+        src,
+    )
 
     state = str(base / "state")
-    ks.run_streaming_kmeans(spark, f"{src}/*", emb.schema, state, str(base / "ckpt"))
+    run_fold(
+        spark, ks.merge_kmeans_batch, f"{src}/*", emb.schema, state,
+        str(base / "ckpt"),
+    )
 
     (ids_want, m_want), want = _batch_grown(spark)
     ids_got, m_got = ks._load_state(spark, f"{state}/centroids")

@@ -8,8 +8,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators.linkage import part_fuzzy_matches
 from near_real_time_data_warehouse_spark.streaming import linkage_stream as ls
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _links_set(df):
@@ -35,18 +37,18 @@ def test_streaming_linkage_equals_batch_build(spark, tmp_path_factory):
     )
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
     n = parts.count()
     cuts = [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, 10**9)]
-    for i, (lo, hi) in enumerate(cuts):
-        parts.filter((F.col("p_partkey") >= lo) & (F.col("p_partkey") < hi)).coalesce(
-            1
-        ).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(
+        [parts.filter((F.col("p_partkey") >= lo) & (F.col("p_partkey") < hi)) for lo, hi in cuts],
+        src,
+    )
 
     state = str(base / "state")
-    ls.run_streaming_linkage(spark, f"{src}/*", parts.schema, state, str(base / "ckpt"))
+    run_fold(
+        spark, ls.merge_linkage_batch, f"{src}/*", parts.schema, state,
+        str(base / "ckpt"),
+    )
 
     names, links = ls.read_linkage_state(spark, state)
     want_links, want_names = _batch_truth(spark)

@@ -9,8 +9,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators import similarity as sim
 from near_real_time_data_warehouse_spark.streaming import pca_stream as ps
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _rows(df):
@@ -63,18 +65,15 @@ def test_streaming_pca_matches_merged_gram(spark, tmp_path_factory):
 
 
 def test_streaming_pca_drain_and_replay(spark, tmp_path_factory):
-    import time as _time
-
     base = tmp_path_factory.mktemp("pca_drain")
     vecs, batches = _vec_batches(spark, [(0, 100), (100, 10**9)])
     src = base / "stream"
     src.mkdir()
-    for i, b in enumerate(batches):
-        b.coalesce(1).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(batches, src)
     state = str(base / "state")
-    ps.run_streaming_pca(
-        spark, f"{src}/*", vecs.schema, state, str(base / "ckpt")
+    run_fold(
+        spark, ps.merge_pca_batch, f"{src}/*", vecs.schema, state,
+        str(base / "ckpt"),
     )
     drained = ps.read_pca_scores(spark, state)
     assert drained.select("vec_id").distinct().count() == vecs.count()

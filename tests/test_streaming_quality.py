@@ -4,6 +4,8 @@ cross-batch PK-uniqueness rule), and epoch replay is idempotent."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators.quality import (
@@ -11,8 +13,10 @@ from near_real_time_data_warehouse_spark.operators.quality import (
 )
 from near_real_time_data_warehouse_spark.sources.testdata import load_table
 from near_real_time_data_warehouse_spark.streaming import quality_stream as qs
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _rows(df):
@@ -27,19 +31,16 @@ def test_streaming_quality_equals_batch_gate(spark, tmp_path_factory):
     orders = load_table(spark, SF_SMALL, "orders")
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
     # split on the order key so PK duplicates can span batch boundaries
     cut = li.agg(F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY l_orderkey)")).collect()[0][0]
     splits = [li.filter(F.col("l_orderkey") <= cut),
               li.filter(F.col("l_orderkey") > cut)]
-    for i, part in enumerate(splits):
-        part.coalesce(1).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(splits, src)
 
     state = str(base / "state")
-    qs.run_streaming_quality(
-        spark, f"{src}/*", li.schema, orders, state, str(base / "ckpt")
+    run_fold(
+        spark, partial(qs.merge_quality_batch, orders=orders), f"{src}/*",
+        li.schema, state, str(base / "ckpt"),
     )
     got = _rows(qs.read_quality_state(spark, state, orders))
     want = _rows(lineitem_expectations(spark, SF_SMALL))

@@ -8,8 +8,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators import clustering as C
 from near_real_time_data_warehouse_spark.streaming import semdedup_stream as ss
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 _SPLIT = 400  # standing corpus trains; later vec_ids arrive as batches
 
@@ -33,18 +35,16 @@ def test_streaming_semdedup_equals_batch(spark, tmp_path_factory):
     )
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
     splits = [(0, _SPLIT), (_SPLIT, _SPLIT + 50), (_SPLIT + 50, 10**9)]
-    for i, (lo, hi) in enumerate(splits):
-        emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).coalesce(
-            1
-        ).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(
+        [emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)) for lo, hi in splits],
+        src,
+    )
 
     state = str(base / "state")
-    ss.run_streaming_semdedup(
-        spark, f"{src}/*", emb.schema, state, str(base / "ckpt")
+    run_fold(
+        spark, ss.merge_semdedup_batch, f"{src}/*", emb.schema, state,
+        str(base / "ckpt"),
     )
     got = _pair_set(ss.read_semdedup_pairs(spark, state))
     want = _batch_twin(spark)

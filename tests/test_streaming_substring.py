@@ -9,8 +9,10 @@ from pyspark.sql import functions as F
 
 from near_real_time_data_warehouse_spark.operators import dedup
 from near_real_time_data_warehouse_spark.streaming import substring_stream as ss
+from near_real_time_data_warehouse_spark.streaming.fold import run_fold
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _rows(df):
@@ -22,16 +24,19 @@ def test_streaming_substring_equals_batch_build(spark, tmp_path_factory):
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select("doc_id", "text")
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
-    for i, (lo, hi) in enumerate([(0, 170), (170, 340), (340, 10**9)]):
-        docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).coalesce(
-            1
-        ).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(
+        [
+            docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            for lo, hi in [(0, 170), (170, 340), (340, 10**9)]
+        ],
+        src,
+    )
 
     state = str(base / "state")
-    ss.run_streaming_substring(spark, f"{src}/*", docs.schema, state, str(base / "ckpt"))
+    run_fold(
+        spark, ss.merge_substring_batch, f"{src}/*", docs.schema, state,
+        str(base / "ckpt"),
+    )
     got = _rows(ss.read_substring_profile(spark, state))
     want = _rows(dedup.substring_spans_df(docs))
     assert got == want and got
