@@ -1090,7 +1090,7 @@ def parse_tiff(payload: bytes) -> dict:
 
     def one(tag, default=None):
         v = tags.get(tag)
-        if v is None:
+        if not v:  # absent, or present with a zero value count
             if default is None:
                 raise MalformedMedia(f"required TIFF tag {tag} missing")
             return default

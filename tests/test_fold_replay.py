@@ -143,22 +143,22 @@ def test_crash_between_state_write_and_commit_replays_exactly_once(
         src,
     )
 
-    def drain(merge, name):
+    def run(merge, name):
         run_fold(
             spark, merge, f"{src}/*", frame.schema, str(base / name),
             str(base / f"{name}_ckpt"),
         )
 
-    drain(merge, "clean")
+    run(merge, "clean")
 
     with pytest.raises(StreamingQueryException, match="injected crash"):
-        drain(_crash_once_after_epoch_1(merge), "crashed")
+        run(_crash_once_after_epoch_1(merge), "crashed")
     commits = base / "crashed_ckpt" / "commits"
     assert (commits / "0").exists()
     assert not (commits / "1").exists()
 
     rerun = []
-    drain(_recording(merge, rerun), "crashed")
+    run(_recording(merge, rerun), "crashed")
     assert rerun == [1, 2], "the rerun must replay epoch 1, then run epoch 2"
 
     clean = _state_tables(spark, str(base / "clean"))

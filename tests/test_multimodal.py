@@ -1398,6 +1398,14 @@ def test_tiff_never_crashes_on_fuzz():
     run()
 
 
+def test_tiff_zero_count_tag_is_malformed():
+    """A required tag whose value count is 0 carries no value: it is
+    malformed media, not an IndexError (fuzz example mi=62, mb=0)."""
+    valid = mm.synthesize_tiff(5, 4, 30, 60, mode="pal", packbits=True)
+    with pytest.raises(mm.MalformedMedia):
+        mm.parse_tiff(valid[:62] + bytes([0]) + valid[63:])
+
+
 def test_tiff_routes_through_quarantine(spark):
     good = mm.synthesize_tiff(6, 3, 10, 20, mode="gray0", big_endian=True)
     bad = good[:8] + bytes([0xEE]) + good[9:]  # corrupt IFD entry count
