@@ -3,13 +3,20 @@
 Re-expresses the reference pipeline (/root/reference/hybrid_join.py) as a
 declarative Spark dataflow:
 
+- The reference keeps its master data resident in one lock-guarded hash
+  table for the whole stream (hybrid_join.py:44-60,119-139). Here each
+  master CSV is parsed once per file version into an Arrow table plus a
+  local relation, held in the session memo under the file's (path,
+  length, mtime) and re-checked with one FileSystem stat per micro-batch:
+  resident like the reference's, but a master refreshed on disk flows
+  into the next batch, which the reference never allows.
 - The MESHJOIN-style hybrid join (hybrid_join.py:168-354) — a hand-rolled
   hash-table/FIFO-queue machine that enriches each streamed sale with
   customer and product master rows — becomes one flagged join
-  (``enrich``) of two broadcast legs: the customer leg flags each row
-  ``cust_matched`` and the loader loads only matched rows (unmatched
-  tuples are evicted, :229-231, and counted); the product leg is LEFT
-  (partial tuples kept, :285-303).
+  (``enrich``) of two broadcast legs against the resident masters: the
+  customer leg flags each row ``cust_matched`` and the loader loads only
+  matched rows (unmatched tuples are evicted, :229-231, and counted); the
+  product leg is LEFT (partial tuples kept, :285-303).
 - The row-at-a-time MySQL loader (hybrid_join.py:356-477) becomes
   set-oriented Parquet writes: dimension upsert = append of the keys not
   yet in the star (first-writer-wins, matching ``INSERT … ON DUPLICATE
@@ -20,24 +27,30 @@ declarative Spark dataflow:
 At scale: master dims are bounded → broadcast, so the stream side never
 shuffles; no read-modify-write round trips (the reference's main
 bottleneck, one SELECT per row at :423). Each (micro-)batch is loaded in
-one pass: it is persisted once, one aggregate returns its distinct
-customer, product and date keys (bounded by the master sizes) and its
-loaded/evicted counts, one job reads the keys already in the star, and
-the fact write runs concurrently with an append to each dimension that
-has new keys — a batch with no new keys writes no dimension file.
+one pass: the fact write is its one job over the batch's rows and also
+observes its distinct customer, product and date keys (bounded by the
+master sizes) and its loaded/evicted counts; a driver-side key index per
+warehouse, seeded from disk once and validated against the dimension
+files' listing, says which keys are new; and each dimension with new keys
+gets one append of rows taken from the resident master — a batch with no
+new keys writes no dimension file and reads nothing of the star.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from functools import partial, reduce
+from typing import Callable
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
-from .functions.timedim import time_attributes
+from . import memo
+from .functions.timedim import date_id, time_attributes
 from .schemas import (
     CUSTOMER_DIM_SCHEMA,
     CUSTOMER_MASTER_SCHEMA,
@@ -47,7 +60,7 @@ from .schemas import (
     TIME_DIM_SCHEMA,
     TRANSACTION_SCHEMA,
 )
-from .sources.maintenance import path_exists
+from .sources.maintenance import dir_listings, file_version, path_exists
 from .streaming.fold import run_concurrent
 
 STAR_TABLES = ("customer_dim", "product_dim", "time_dim", "salefact")
@@ -56,7 +69,7 @@ STAR_SCHEMAS = (CUSTOMER_DIM_SCHEMA, PRODUCT_DIM_SCHEMA, TIME_DIM_SCHEMA, SALE_F
 
 # --- readers (S1/S2 with the reference's casts, hybrid_join.py:36-40) -----
 
-def read_customer_master(spark: SparkSession, path: str) -> DataFrame:
+def _parse_customer_master(spark: SparkSession, path: str) -> DataFrame:
     """Customer master CSV → customer_dim shape. Age bucket is stored as
     its integer lower bound ('55+'→55, '26-35'→26), hybrid_join.py:402."""
     raw = spark.read.option("header", True).schema(CUSTOMER_MASTER_SCHEMA).csv(path)
@@ -71,7 +84,7 @@ def read_customer_master(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_product_master(spark: SparkSession, path: str) -> DataFrame:
+def _parse_product_master(spark: SparkSession, path: str) -> DataFrame:
     """Product master CSV → product_dim shape; price$ → DECIMAL(10,2)
     (starSchema.sql:18 — decimal, not float, for money)."""
     raw = spark.read.option("header", True).schema(PRODUCT_MASTER_SCHEMA).csv(path)
@@ -84,6 +97,40 @@ def read_product_master(spark: SparkSession, path: str) -> DataFrame:
         F.col("supplierID").alias("supplier_id"),
         F.col("supplierName").alias("supplier_name"),
     )
+
+
+def _resident_master(
+    spark: SparkSession, path: str, parse: Callable[[SparkSession, str], DataFrame]
+) -> DataFrame:
+    """The master at ``path`` as a local relation, parsed once per file
+    version: the memo key is the file's (path, length, mtime), checked with
+    one FileSystem stat per call, so a master appended to or rewritten
+    between micro-batches flows into the next one. The frame carries its
+    rows as an Arrow table (``_graft_rows``), from which ``load_star_batch``
+    builds new dimension rows on the driver. A new version drops the
+    older ones of the same path."""
+    length, mtime = file_version(spark, path)
+
+    def build() -> DataFrame:
+        memo.drop(spark, "masters", (path,))
+        rows = parse(spark, path).toArrow()
+        frame = spark.createDataFrame(rows)
+        frame._graft_rows = rows  # noqa: SLF001
+        return frame
+
+    return memo.cached(spark, "masters", (path, length, mtime), build)
+
+
+def read_customer_master(spark: SparkSession, path: str) -> DataFrame:
+    """The customer master in customer_dim shape, resident (see
+    ``_resident_master``)."""
+    return _resident_master(spark, path, _parse_customer_master)
+
+
+def read_product_master(spark: SparkSession, path: str) -> DataFrame:
+    """The product master in product_dim shape, resident (see
+    ``_resident_master``)."""
+    return _resident_master(spark, path, _parse_product_master)
 
 
 def read_transactions(
@@ -109,44 +156,37 @@ def read_transactions(
 
 # --- enrichment (J1 + J2 + P7-P9) -----------------------------------------
 
+# The enriched batch, as one projection over the joined legs (t: the
+# transactions, c: the customer master, p: the product master).
+_ENRICHED = (
+    "t.orderID AS order_id",
+    "t.Customer_ID AS customer_id",
+    "t.Product_ID AS product_id",
+    "to_date(t.date, 'M/d/yyyy') AS full_date",
+    "t.quantity",
+    "CAST(round(t.quantity * p.price, 2) AS DECIMAL(12,2)) AS purchase_amount",
+    "c.customer_id IS NOT NULL AS cust_matched",
+)
+
+
 def enrich(txns: DataFrame, customer_dim: DataFrame, product_dim: DataFrame) -> DataFrame:
-    """The hybrid join, Spark-first, as one flagged join. The customer
-    leg is LEFT with a ``cust_matched`` flag: its matched rows are the
-    inner join's (J1 eviction semantics), and the dropped-tuple count
-    stays observable from the same joined batch — the reference PRINTS
-    its evicted unmatched-key counts (hybrid_join.py:208,236,354) while
-    a bare inner join swallows them. The product leg is LEFT (J2 keeps
-    partial tuples); both sides broadcast — the stream never shuffles.
-    Adds the derived measure and the parsed event date."""
-    with_date = txns.filter(F.col("Customer_ID").isNotNull()).withColumn(
-        "full_date", F.to_date("date", "M/d/yyyy")
-    )
-    joined = (
-        with_date.join(
-            F.broadcast(
-                customer_dim.select(
-                    F.col("customer_id").alias("Customer_ID")
-                ).withColumn("cust_matched", F.lit(True))
-            ),
-            "Customer_ID",
-            "left",
-        )
-        .join(
-            F.broadcast(product_dim.select(F.col("product_id").alias("Product_ID"), "price")),
-            "Product_ID",
-            "left",
-        )
-    )
-    return joined.select(
-        F.col("orderID").alias("order_id"),
-        F.col("Customer_ID").alias("customer_id"),
-        F.col("Product_ID").alias("product_id"),
-        "full_date",
-        F.col("quantity"),
-        F.round(F.col("quantity") * F.col("price"), 2)
-        .cast("decimal(12,2)")
-        .alias("purchase_amount"),
-        F.coalesce(F.col("cust_matched"), F.lit(False)).alias("cust_matched"),
+    """The hybrid join, Spark-first, as one flagged join against the
+    resident masters. The customer leg is LEFT with a ``cust_matched``
+    flag: its matched rows are the inner join's (J1 eviction semantics),
+    and the dropped-tuple count stays observable from the same joined
+    batch — the reference PRINTS its evicted unmatched-key counts
+    (hybrid_join.py:208,236,354) while a bare inner join swallows them.
+    The product leg is LEFT (J2 keeps partial tuples); both sides
+    broadcast — the stream never shuffles. Adds the derived measure and
+    the parsed event date. Built from a few DataFrame operations over SQL
+    expression text, so a micro-batch pays little driver-side planning."""
+    t = txns.where("Customer_ID IS NOT NULL").alias("t")
+    c = F.broadcast(customer_dim).alias("c")
+    p = F.broadcast(product_dim).alias("p")
+    return (
+        t.join(c, F.expr("t.Customer_ID = c.customer_id"), "left")
+        .join(p, F.expr("t.Product_ID = p.product_id"), "left")
+        .selectExpr(*_ENRICHED)
     )
 
 
@@ -173,27 +213,57 @@ _DIMS = (
     ("product_dim", "product_id", PRODUCT_DIM_SCHEMA),
     ("time_dim", "full_date", TIME_DIM_SCHEMA),
 )
-_MASTER_PRODUCT = "master_product_id"
 
 
-def _known_keys(
-    spark: SparkSession, warehouse_dir: str, product_master: DataFrame
-) -> dict[str, set]:
-    """Keys already in each star dimension, plus the product master's keys
-    (a batch may name unknown products, J2), collected in ONE job. Dims are
+@dataclass
+class _StarKeys:
+    """The keys each star dimension holds, and the listing of the
+    dimension files they were read from or last written to."""
+
+    listing: tuple
+    keys: dict[str, set]
+
+
+def _dim_listing(spark: SparkSession, warehouse_dir: str) -> tuple:
+    return dir_listings(spark, [f"{warehouse_dir}/{dim}" for dim, _, _ in _DIMS])
+
+
+def _known_keys(spark: SparkSession, warehouse_dir: str) -> dict[str, set]:
+    """Keys already in each star dimension, collected in ONE job. Dims are
     read with their declared schemas, so no schema-inference job runs. The
     sets are bounded by the master sizes."""
-    frames = [product_master.select(F.col("product_id").alias(_MASTER_PRODUCT))]
-    for dim, key, schema in _DIMS:
-        path = f"{warehouse_dir}/{dim}"
-        if path_exists(spark, path):
-            frames.append(spark.read.schema(schema).parquet(path).select(key))
-    known = {c: set() for c in (_MASTER_PRODUCT, *(key for _, key, _ in _DIMS))}
-    for row in reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames).collect():
-        for c, v in row.asDict().items():
-            if v is not None:
-                known[c].add(v)
+    known = {key: set() for _, key, _ in _DIMS}
+    frames = [
+        spark.read.schema(schema).parquet(path).select(key)
+        for dim, key, schema in _DIMS
+        if path_exists(spark, path := f"{warehouse_dir}/{dim}")
+    ]
+    if frames:
+        union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+        for row in union.collect():
+            for c, v in row.asDict().items():
+                if v is not None:
+                    known[c].add(v)
     return known
+
+
+def _star_keys(spark: SparkSession, warehouse_dir: str) -> _StarKeys:
+    """The warehouse's key index: the reference's resident hash table
+    (hybrid_join.py:119-139), made restart-safe. It is seeded from disk
+    once per session and re-seeded whenever the dimension files differ
+    from the listing it holds (a file deleted, compacted or written by
+    another session); ``load_star_batch`` advances it after a batch's
+    writes and drops it when any of them fails."""
+    listing = _dim_listing(spark, warehouse_dir)
+
+    def seed() -> _StarKeys:
+        return _StarKeys(listing, _known_keys(spark, warehouse_dir))
+
+    index = memo.cached(spark, "star_keys", (warehouse_dir,), seed)
+    if index.listing != listing:
+        memo.drop(spark, "star_keys", (warehouse_dir,))
+        index = memo.cached(spark, "star_keys", (warehouse_dir,), seed)
+    return index
 
 
 def _key_frame(spark: SparkSession, field: T.StructField, keys: set) -> DataFrame:
@@ -202,6 +272,46 @@ def _key_frame(spark: SparkSession, field: T.StructField, keys: set) -> DataFram
     return spark.createDataFrame(
         pa.table({field.name: pa.array(sorted(keys), to_arrow_type(field.dataType))})
     )
+
+
+def _master_rows(master: DataFrame, key: str, keys: set) -> pa.Table:
+    """The resident master's rows for ``keys``, in key order; a key the
+    master repeats takes its first row, and a key it lacks has none."""
+    rows = master._graft_rows  # noqa: SLF001
+    column = rows.column(key)
+    wanted = pa.array(sorted(keys), column.type)
+    return rows.take(pc.index_in(wanted, value_set=column.combine_chunks()).drop_null())
+
+
+def _dim_appends(
+    spark: SparkSession, seen: dict, index: _StarKeys, masters: dict, warehouse_dir: str
+) -> tuple[list, dict[str, set]]:
+    """One append per dimension with keys in ``seen`` that ``index`` lacks,
+    as thunks, and the keys each would write. Customer and product rows
+    come from the resident masters (a key the master lacks gets no row),
+    time rows are derived from the new dates."""
+    writes, written = [], {}
+    for dim, key, schema in _DIMS:
+        new = set(seen[key]) - index.keys[key]
+        if key in masters:
+            rows = _master_rows(masters[key], key, new)
+            if not rows.num_rows:
+                continue
+            written[key] = set(rows.column(key).to_pylist())
+            frame = spark.createDataFrame(rows)
+        elif new:
+            written[key] = new
+            attrs = time_attributes(F.col(key))
+            frame = _key_frame(spark, schema[key], new).select(
+                *[attrs[c.name].alias(c.name) for c in TIME_DIM_SCHEMA]
+            )
+        else:
+            continue
+        # One file per append: a local frame spans every task slot.
+        writes.append(
+            partial(frame.coalesce(1).write.mode("append").parquet, f"{warehouse_dir}/{dim}")
+        )
+    return writes, written
 
 
 def load_star_batch(
@@ -216,24 +326,27 @@ def load_star_batch(
     reference's per-row inserts + per-row time-dim SELECT
     (hybrid_join.py:398-463) with one pass per batch:
 
-    1. the batch is persisted once, and ONE aggregate over it returns its
-       distinct customer, product and date keys plus its loaded and
-       evicted row counts;
-    2. concurrently, one job reads the keys already in the star
-       (``_known_keys``);
-    3. the fact write and an append to each dimension that has new keys
-       run concurrently. A dimension with no new keys is not written, so
-       a replayed or fully-known batch adds no dimension file.
+    1. the fact write is the batch's one job over its rows; it also
+       observes (``DataFrame.observe``, no shuffle) the batch's distinct
+       customer, product and date keys and its loaded and evicted row
+       counts, so each task hands the driver only its own distinct keys;
+    2. the keys not yet in the star are found in the warehouse's resident
+       key index (``_star_keys``), with no read of the star;
+    3. each dimension with new keys gets one append, and these run
+       concurrently: customer and product rows are taken from the
+       resident master on the driver, time rows derived from the new
+       dates. A batch with no new keys writes no dimension file.
 
     Dimension upserts stay first-writer-wins (the reference's no-op
     ``ON DUPLICATE KEY UPDATE``, :365-378): only keys absent from the
-    star are appended, deduplicated within the batch. The key sets live on
-    the driver; they are bounded by the master sizes, which the scale
-    contract already requires to be broadcastable.
+    star are appended, once each. The key sets live on the driver; they
+    are bounded by the master sizes, which the scale contract already
+    requires to be broadcastable.
 
-    The batch comes from ``enrich``: only its ``cust_matched`` rows load;
-    the others are counted as evicted. Returns
-    ``{"loaded": n, "evicted": m}``.
+    ``customer_dim`` and ``product_dim`` are the resident masters
+    (``read_customer_master`` / ``read_product_master``). The batch comes
+    from ``enrich`` against them: only its ``cust_matched`` rows load; the
+    others are counted as evicted. Returns ``{"loaded": n, "evicted": m}``.
 
     ``epoch_id`` (streaming): the fact append lands under
     ``salefact/epoch=<id>`` with overwrite semantics, so a replayed
@@ -241,27 +354,21 @@ def load_star_batch(
     rewrites the same directory instead of duplicating rows — this plus
     the idempotent dim upserts makes the streaming load exactly-once end
     to end. Batch loads (epoch_id=None) keep the plain append layout."""
-    matched = F.col("cust_matched")
-    batch = enriched.persist()
+    index = _star_keys(spark, warehouse_dir)
     try:
-        keys_and_counts = batch.agg(
-            *[
-                F.collect_set(F.when(matched, F.col(key))).alias(key)
-                for _, key, _ in _DIMS
-            ],
+        matched = F.col("cust_matched")
+        observation = Observation()
+        observed = enriched.observe(
+            observation,
+            *[F.collect_set(F.when(matched, F.col(key))).alias(key) for _, key, _ in _DIMS],
             F.count_if(matched).alias("loaded"),
             F.count_if(~matched).alias("evicted"),
         )
-        seen, known = run_concurrent(
-            keys_and_counts.first, partial(_known_keys, spark, warehouse_dir, product_dim)
-        )
-
-        attrs = time_attributes(F.col("full_date"))
-        fact = batch.filter(matched).select(
+        fact = observed.where(matched).select(
             "order_id",
             "customer_id",
             "product_id",
-            attrs["date_id"].alias("date_id"),
+            date_id(F.col("full_date")),
             "quantity",
             "purchase_amount",
             # Physical layout: the fact is partitioned by year so the year-
@@ -270,7 +377,7 @@ def load_star_batch(
             # Named sale_year: `year` would collide with time_dim.year in SQL
             # over the joined star views. At cluster scale the unit would be
             # year+month or date.
-            (attrs["date_id"] / 10000).cast("int").alias("sale_year"),
+            F.year("full_date").alias("sale_year"),
         )
         if epoch_id is None:
             fact_write = fact.write.mode("append")
@@ -278,26 +385,19 @@ def load_star_batch(
         else:
             fact_write = fact.write.mode("overwrite")
             fact_path = f"{warehouse_dir}/salefact/epoch={epoch_id}"
-        writes = [partial(fact_write.partitionBy("sale_year").parquet, fact_path)]
+        fact_write.partitionBy("sale_year").parquet(fact_path)
+        seen = observation.get
 
-        new = {key: set(seen[key]) - known[key] for _, key, _ in _DIMS}
-        new["product_id"] &= known[_MASTER_PRODUCT]
         masters = {"customer_id": customer_dim, "product_id": product_dim}
-        for dim, key, schema in _DIMS:
-            if not new[key]:
-                continue
-            keys = _key_frame(spark, schema[key], new[key])
-            if key in masters:
-                rows = masters[key].join(F.broadcast(keys), key, "left_semi").dropDuplicates([key])
-            else:
-                # One file per append: a local frame spans every task slot.
-                rows = keys.coalesce(1).select(
-                    *[attrs[c.name].alias(c.name) for c in TIME_DIM_SCHEMA]
-                )
-            writes.append(partial(rows.write.mode("append").parquet, f"{warehouse_dir}/{dim}"))
-        run_concurrent(*writes)
-    finally:
-        batch.unpersist()
+        writes, written = _dim_appends(spark, seen, index, masters, warehouse_dir)
+        if writes:
+            run_concurrent(*writes)
+            for key, keys in written.items():
+                index.keys[key] |= keys
+            index.listing = _dim_listing(spark, warehouse_dir)
+    except BaseException:
+        memo.drop(spark, "star_keys", (warehouse_dir,))
+        raise
     return {"loaded": seen["loaded"], "evicted": seen["evicted"]}
 
 

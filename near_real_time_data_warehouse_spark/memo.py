@@ -1,7 +1,7 @@
 """Session-scoped build memo: the one store for standing state that a
 session builds once and many queries reuse (shingle sketches, pair and
 component tables, ANN query blocks, trained centroids, search results,
-the persisted star).
+the persisted star, the ETL's resident masters and star key index).
 
 An entry is keyed by ``(group, applicationId, *key)``, so a new Spark
 session rebuilds it. ``group`` names the family a reset drops together
@@ -45,8 +45,20 @@ def clear(group: str | None = None) -> None:
     DataFrame unpersisted, for the value itself and for each element of a
     tuple or dict value. A frame its owner already unpersisted reports
     ``is_cached`` False and costs nothing here."""
+    _release(lambda k: group is None or k[0] == group)
+
+
+def drop(spark: SparkSession, group: str, prefix: tuple) -> None:
+    """Drop this session's ``group`` entries whose key starts with
+    ``prefix``, releasing what they hold as ``clear`` does. An entry whose
+    build is still running is not in the store yet and is kept."""
+    head = (group, spark.sparkContext.applicationId, *prefix)
+    _release(lambda k: k[: len(head)] == head)
+
+
+def _release(match: Callable[[tuple], bool]) -> None:
     with _LOCKS_GUARD:
-        keys = [k for k in list(_ENTRIES) if group is None or k[0] == group]
+        keys = [k for k in list(_ENTRIES) if match(k)]
         for k in keys:
             _LOCKS.pop(k, None)
     for k in keys:

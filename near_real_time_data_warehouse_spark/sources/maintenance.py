@@ -33,6 +33,42 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(conf).exists(p)
 
 
+def file_version(spark: SparkSession, path: str) -> tuple[int, int]:
+    """(length, modification time in ms) of one file, via the Hadoop
+    FileSystem API: the version key of a file that is rewritten or
+    appended to in place."""
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    status = p.getFileSystem(conf).getFileStatus(p)
+    return status.getLen(), status.getModificationTime()
+
+
+def dir_listings(spark: SparkSession, paths: list[str]) -> tuple:
+    """For each directory in ``paths``: the sorted paths of its entries
+    plus their total size, or None when it does not exist.
+    Via the Hadoop FileSystem API, in a fixed number of round trips per
+    directory however many entries it holds. Two listings are equal when
+    no entry was added, removed or renamed and the total size is the
+    same."""
+    jvm = spark.sparkContext._jvm  # noqa: SLF001
+    conf = spark.sparkContext._jsc.hadoopConfiguration()  # noqa: SLF001
+    hadoop_fs = jvm.org.apache.hadoop.fs
+    path_class, stat2paths = hadoop_fs.Path, hadoop_fs.FileUtil.stat2Paths
+    to_string = jvm.org.apache.commons.lang3.ArrayUtils.toString
+    out = []
+    for path in paths:
+        p = path_class(path)
+        fs = p.getFileSystem(conf)
+        if not fs.exists(p):
+            out.append(None)
+            continue
+        # All entries in one string, "{path,path,...}".
+        names = to_string(stat2paths(fs.listStatus(p)))
+        out.append((tuple(sorted(names[1:-1].split(","))), fs.getContentSummary(p).getLength()))
+    return tuple(out)
+
+
 def dir_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(total_bytes, n_data_files) of a parquet directory, via the Hadoop
     FileSystem API so any supported scheme works, not just local disk."""

@@ -4,11 +4,15 @@ The reference's threaded producer/consumer machinery (hybrid_join.py:
 142-166 producer, :168-311 join thread, thread-safe queue + lock-guarded
 hash table) collapses into one streaming query:
 
-    readStream(csv) → stream-static broadcast joins → foreachBatch(star loader)
+    readStream(csv) → foreachBatch(enrich against the resident masters
+                                   → star loader)
 
-Stream-static joins re-read the static side per micro-batch — strictly
-better than the reference, which loads master data once at startup
-(:59-60) and never refreshes. ``Trigger.AvailableNow`` gives the same
+Enrichment runs inside the sink. Each micro-batch fetches the resident
+masters (``etl.read_customer_master`` / ``read_product_master``): parsed
+once per file version and re-checked with one FileSystem stat per batch,
+so they stay resident like the reference's hash table (:59-60), yet a
+master refreshed on disk flows into the very next batch, which the
+reference never allows. ``Trigger.AvailableNow`` gives the same
 drain-and-stop semantics as the reference's EOF shutdown (:162-163,
 :209-211). End-to-end exactly-once comes from checkpointed offsets plus
 an idempotent sink (foreachBatch alone is at-least-once): dim upserts
@@ -19,11 +23,10 @@ at-least-once (:465-471, T5 in SURVEY.md §2.6).
 
 Both sinks enrich with the one flagged join (``etl.enrich``: customer
 leg LEFT plus ``cust_matched``) and make one ``etl.load_star_batch``
-call per micro-batch: one aggregate over the persisted batch yields its
-key sets (bounded by the masters) and its loaded/evicted counts; only
-matched rows load, and the fact write and the appends of dimensions
-with new keys then run concurrently. ``streaming.fold.drain`` runs the
-query.
+call per micro-batch: the fact write observes the batch's key sets
+(bounded by the masters) and its loaded/evicted counts, the warehouse's
+resident key index names the new keys, and only matched rows load.
+``streaming.fold.drain`` runs the query.
 """
 
 from __future__ import annotations
@@ -59,24 +62,27 @@ def run_streaming_etl(
     With a ``metrics`` ledger each batch's loaded and evicted counts —
     the reference's per-batch eviction counters
     (hybrid_join.py:208,236,354) — are recorded there."""
-    cust = read_customer_master(spark, customer_master_path)
-    prod = read_product_master(spark, product_master_path)
     stream = read_transactions(
         spark, transactions_dir, streaming=True, max_files_per_trigger=max_files_per_trigger
     )
 
     def sink(s: SparkSession, batch: DataFrame, epoch_id: int) -> None:
+        # The resident masters, re-checked against their files per batch.
+        cust = read_customer_master(s, customer_master_path)
+        prod = read_product_master(s, product_master_path)
         # epoch_id keys the fact write's overwrite directory: foreachBatch
         # alone is at-least-once, and a crash between the fact append and
         # the checkpoint commit would replay the batch; the per-epoch
         # overwrite (+ first-writer-wins dim upserts) makes the replay
         # idempotent. load_star_batch is looked up in this module at call
         # time, so a caller may wrap it (the traced benchmark run does).
-        counts = load_star_batch(s, batch, cust, prod, warehouse_dir, epoch_id=epoch_id)
+        counts = load_star_batch(
+            s, enrich(batch, cust, prod), cust, prod, warehouse_dir, epoch_id=epoch_id
+        )
         if metrics is not None:
             metrics.record(epoch_id, **counts)
 
-    drain(enrich(stream, cust, prod), checkpoint_dir, sink)
+    drain(stream, checkpoint_dir, sink)
 
 
 def run_streaming_etl_with_retry(
@@ -92,8 +98,8 @@ def run_streaming_etl_with_retry(
 ) -> None:
     """Streaming ETL with late-arriving-dimension handling: transactions
     whose customer has no master row are PARKED (raw shape) instead of
-    evicted, and every micro-batch retries batch ∪ parked against a
-    freshly-read master — so a master refresh between drains rescues
+    evicted, and every micro-batch retries batch ∪ parked against the
+    current master — so a master refresh between drains rescues
     previously-orphaned facts (the reference drops them forever).
 
     Facts stay exactly-once (per-epoch overwrite in load_star_batch).
@@ -107,9 +113,9 @@ def run_streaming_etl_with_retry(
     micro-batch — the injection seam the mid-query master-refresh test
     uses to swap the master file between batches of ONE streaming
     query. Production needs no hook: masters are ordinary files that
-    change on disk, and this path re-reads them per batch, so an SCD
-    update published mid-query flows into the very next batch's
-    stream-static join."""
+    change on disk, and every batch re-checks the resident masters
+    against their files, so an SCD update published mid-query flows into
+    the very next batch's join."""
     stream = read_transactions(
         spark, transactions_dir, streaming=True, max_files_per_trigger=max_files_per_trigger
     )
@@ -117,7 +123,8 @@ def run_streaming_etl_with_retry(
     def sink(s: SparkSession, batch: DataFrame, epoch_id: int) -> None:
         if on_batch is not None:
             on_batch(epoch_id)
-        # Re-read masters per batch: the refresh is what rescues orphans.
+        # The resident masters, re-checked against their files per batch:
+        # a refresh is what rescues orphans.
         cust = read_customer_master(s, customer_master_path)
         prod = read_product_master(s, product_master_path)
         full = batch

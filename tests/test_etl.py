@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import gc
 import os
 from pathlib import Path
 
@@ -289,8 +290,10 @@ def test_streaming_eviction_metric_equals_anti_join(
 # --- one-pass micro-batch load ----------------------------------------------
 
 DIMS = ("customer_dim", "product_dim", "time_dim")
-WARM_BATCH_JOBS = 11
-KNOWN_KEYS_BATCH_JOBS = 7
+WARM_BATCH_JOBS = 5
+KNOWN_KEYS_BATCH_JOBS = 3
+WARM_CALL_ROUND_TRIPS = 500
+ORPHAN_CID = 9999999  # the fixture's unknown-customer id (~5% of orders)
 
 
 class _RunIds(StreamingQueryListener):
@@ -527,3 +530,136 @@ def test_ledger_counts_a_replayed_epoch_once():
     ledger.record(1, loaded=7, evicted=2)  # replay
     assert [b["epoch_id"] for b in ledger.batches] == [0, 1]
     assert (ledger.total_loaded, ledger.total_evicted) == (12, 3)
+
+
+# --- resident masters and the star key index ---------------------------------
+
+
+def _customers(rows: list[str]) -> set[int]:
+    """The master customers (the fixture's unknown one excluded) named by
+    transaction CSV lines."""
+    return {int(r.split(",")[1]) for r in rows} - {ORPHAN_CID}
+
+
+def test_warm_call_round_trips(spark, paths, tmp_path_factory, monkeypatch):
+    """Pins the Py4J round trips one warm ``run_streaming_etl`` call makes
+    (every driver-side plan operation, column and FileSystem probe costs
+    one or more), object releases excluded. Before the resident masters
+    and with PySpark's call-site capture on, a warm call made about
+    1,900."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    base = tmp_path_factory.mktemp("round_trips")
+    _write_parts(paths, base / "txns", 2)
+    (base / "txns" / "t1.csv").rename(base / "t1.csv")
+    args = (str(base / "txns"), str(paths["customer"]), str(paths["product"]),
+            str(base / "wh"), str(base / "ckpt"))
+    run_streaming_etl(spark, *args)  # cold
+    (base / "t1.csv").rename(base / "txns" / "t1.csv")
+    gc.collect()  # earlier garbage would release its JVM objects inside the count
+    trips, send = [0], ClientServerConnection.send_command
+
+    def counting(self, command):  # noqa: ANN001, ANN202
+        # Object releases follow the Python garbage collector's timing, not
+        # what the call builds, so they are not counted.
+        trips[0] += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    run_streaming_etl(spark, *args)
+    monkeypatch.undo()
+    assert 0 < trips[0] <= WARM_CALL_ROUND_TRIPS
+
+
+def test_master_append_between_calls_loads_the_new_customer(spark, tmp_path_factory):
+    """A customer appended to the master between two calls is in the
+    resident master of the second: its rows load instead of being
+    evicted, and its dimension row is appended once."""
+    base = tmp_path_factory.mktemp("master_append")
+    paths = write_fixture_csvs(base / "fixture")
+    header, *rows = (paths["transactions"] / "transactions.csv").read_text().splitlines()
+    orphan = [r for r in rows if int(r.split(",")[1]) == ORPHAN_CID]
+    txn = base / "txns"
+    txn.mkdir()
+    (txn / "t0.csv").write_text("\n".join([header] + rows) + "\n")
+    wh = str(base / "wh")
+    args = (str(txn), str(paths["customer"]), str(paths["product"]), wh, str(base / "ckpt"))
+    ledger = EvictionLedger()
+    run_streaming_etl(spark, *args, metrics=ledger)
+    assert ledger.batches[0]["evicted"] == len(orphan) > 0
+
+    with open(paths["customer"], "a", newline="") as f:
+        f.write(f"{ORPHAN_CID},M,26-35,7,B,2,0\r\n")
+    (txn / "t1.csv").write_text("\n".join([header] + orphan) + "\n")
+    run_streaming_etl(spark, *args, metrics=ledger)
+    assert (ledger.batches[1]["loaded"], ledger.batches[1]["evicted"]) == (len(orphan), 0)
+    star = etl.read_star(spark, wh)
+    assert star["salefact"].filter(F.col("customer_id") == ORPHAN_CID).count() == len(orphan)
+    assert star["customer_dim"].filter(F.col("customer_id") == ORPHAN_CID).count() == 1
+
+
+def test_deleted_dimension_file_reseeds_the_key_index(spark, paths, tmp_path_factory):
+    """A customer_dim file deleted between calls invalidates the key
+    index: the next batch re-seeds it from disk and appends the lost keys
+    it names again, once each."""
+    base = tmp_path_factory.mktemp("deleted_dim_file")
+    chunks = _write_parts(paths, base / "txns", 2)
+    (base / "txns" / "t1.csv").rename(base / "t1.csv")
+    wh = str(base / "wh")
+    args = (str(base / "txns"), str(paths["customer"]), str(paths["product"]), wh,
+            str(base / "ckpt"))
+    run_streaming_etl(spark, *args)
+    lost = _customers(chunks[0])
+    dim_dir = Path(wh) / "customer_dim"
+    parts = [f for f in dim_dir.iterdir() if f.name.startswith("part-")]
+    assert len(parts) == 1  # the first batch's customers, all of them
+    parts[0].unlink()
+
+    (base / "t1.csv").rename(base / "txns" / "t1.csv")
+    run_streaming_etl(spark, *args)
+    assert lost & _customers(chunks[1])  # the second batch names lost keys
+    dim = [r.customer_id for r in etl.read_star(spark, wh)["customer_dim"].collect()]
+    assert sorted(dim) == sorted(_customers(chunks[1]))
+
+
+def test_crash_in_dimension_write_drops_the_key_index(
+    spark, paths, tmp_path_factory, monkeypatch, clean_three_epochs
+):
+    """A dimension write of epoch 1 raises: the warehouse's key index is
+    dropped with the failure, and the rerun re-seeds it from disk once
+    and leaves the star equal to a clean run's."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from near_real_time_data_warehouse_spark import memo
+
+    base = tmp_path_factory.mktemp("crash_drops_index")
+    _write_parts(paths, base / "txns", 3)
+    wh = str(base / "wh")
+    args = (str(base / "txns"), str(paths["customer"]), str(paths["product"]), wh,
+            str(base / "ckpt"))
+    written, parquet = [], DataFrameWriter.parquet
+
+    def parquet_failing_once(self, path, *a, **kw):  # noqa: ANN001, ANN002, ANN003, ANN202
+        if path == f"{wh}/customer_dim":
+            written.append(path)
+            if len(written) == 2:  # epoch 1's customer append
+                raise RuntimeError("injected crash writing customer_dim")
+        return parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_failing_once)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        run_streaming_etl(spark, *args, max_files_per_trigger=1)
+    assert not [k for k in memo._ENTRIES if k[0] == "star_keys" and k[2:] == (wh,)]
+
+    seeds, known_keys = [], etl._known_keys
+
+    def counting_seed(*a):  # noqa: ANN002, ANN202
+        seeds.append(a)
+        return known_keys(*a)
+
+    monkeypatch.setattr(etl, "_known_keys", counting_seed)
+    run_streaming_etl(spark, *args, max_files_per_trigger=1)
+    assert len(seeds) == 1
+    assert _star_sets(spark, wh) == clean_three_epochs[0]

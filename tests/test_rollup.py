@@ -12,11 +12,10 @@ from near_real_time_data_warehouse_spark.streaming.rollup import (
 )
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def test_incremental_rollup_equals_batch(spark, tmp_path_factory):
-    import time as _time
-
     base = tmp_path_factory.mktemp("rollup")
     events = spark.read.parquet(f"{SF_SMALL}/events.parquet")
 
@@ -29,9 +28,7 @@ def test_incremental_rollup_equals_batch(spark, tmp_path_factory):
     )
     src = base / "stream"
     src.mkdir()
-    for i, s in enumerate(slices):
-        s.coalesce(1).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)  # file order = modification time
+    land_batches(slices, src)  # file order = modification time
 
     out, ckpt = str(base / "rollup_out"), str(base / "ckpt")
     day_out = str(base / "rollup_day_out")

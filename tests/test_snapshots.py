@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from near_real_time_data_warehouse_spark.sources import snapshots as S
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def _rows(df):
@@ -231,13 +232,13 @@ def test_streaming_snapshot_sink_exactly_once(spark, tmp_path_factory):
     src_df = spark.createDataFrame(rows, "k long, v string")
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
-    for i, (lo, hi) in enumerate([(0, 20), (20, 40), (40, 999)]):
-        src_df.filter((F.col("k") >= lo) & (F.col("k") < hi)).coalesce(1).write.parquet(
-            f"{src}/part{i}"
-        )
-        _time.sleep(1.1)
+    land_batches(
+        [
+            src_df.filter((F.col("k") >= lo) & (F.col("k") < hi))
+            for lo, hi in [(0, 20), (20, 40), (40, 999)]
+        ],
+        src,
+    )
 
     table = str(base / "table")
     S.run_streaming_snapshot_sink(

@@ -13,6 +13,7 @@ from near_real_time_data_warehouse_spark.streaming.monitor import (
 )
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def test_streaming_anomalies_equal_batch(spark):
@@ -75,14 +76,13 @@ def test_monitor_dense_eviction_equals_batch(spark, tmp_path_factory):
     e = _dense_events(spark)
     src = base / "stream"
     src.mkdir()
-    import time as _time
-
-    for i, (lo, hi) in enumerate([(0, 30), (30, 60), (60, 90)]):
-        s = e.filter(
-            (F.col("us") >= lo * 3_600_000_000) & (F.col("us") < hi * 3_600_000_000)
-        )
-        s.coalesce(1).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(
+        [
+            e.filter((F.col("us") >= lo * 3_600_000_000) & (F.col("us") < hi * 3_600_000_000))
+            for lo, hi in [(0, 30), (30, 60), (60, 90)]
+        ],
+        src,
+    )
 
     stream = (
         spark.readStream.schema(e.schema)
@@ -126,8 +126,6 @@ def test_monitor_eviction_multi_batch_still_equals_batch(spark, tmp_path_factory
     horizon: eviction engages between batches, yet the last emission per
     hour still equals the batch operator — an evicted hour's final flag
     was emitted while it was live and nothing after it can change it."""
-    import time as _time
-
     base = tmp_path_factory.mktemp("monitor_evict")
     e = spark.read.parquet(f"{SF_SMALL}/events.parquet")
     e = e.withColumn("us", eventtime.us_expr(e))
@@ -135,13 +133,16 @@ def test_monitor_eviction_multi_batch_still_equals_batch(spark, tmp_path_factory
     third = (hi - lo) // 3
     src = base / "stream"
     src.mkdir()
-    for i in range(3):
-        s = e.filter(
-            (F.col("us") >= lo + i * third)
-            & (F.col("us") < (lo + (i + 1) * third if i < 2 else hi + 1))
-        )
-        s.coalesce(1).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)
+    land_batches(
+        [
+            e.filter(
+                (F.col("us") >= lo + i * third)
+                & (F.col("us") < (lo + (i + 1) * third if i < 2 else hi + 1))
+            )
+            for i in range(3)
+        ],
+        src,
+    )
 
     stream = (
         spark.readStream.schema(e.schema)
@@ -180,8 +181,6 @@ def test_monitor_drops_beyond_horizon_late_events(spark, tmp_path_factory):
     final flag is already out and re-opening it from zero would emit
     garbage. Verified by streaming two batches where the second carries
     one such event: final emissions equal the stream WITHOUT it."""
-    import time as _time
-
     from near_real_time_data_warehouse_spark.streaming.monitor import LATE_HOURS
 
     def write_batches(base, with_late):
@@ -194,9 +193,7 @@ def test_monitor_drops_beyond_horizon_late_events(spark, tmp_path_factory):
             assert 39 - 5 > LATE_HOURS
             b2.append(("click", 5 * 3_600_000_000 + 1, 99.0))
         schema = "event_type STRING, us LONG, value DOUBLE"
-        for i, rows in enumerate([b1, b2]):
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{src}/p{i}")
-            _time.sleep(1.1)
+        land_batches([spark.createDataFrame(rows, schema) for rows in (b1, b2)], src)
         return src, schema
 
     def final_emissions(tag, src, schema):

@@ -9,11 +9,10 @@ from near_real_time_data_warehouse_spark.operators.scd import _orders_feed, scd2
 from near_real_time_data_warehouse_spark.streaming.dimensions import run_streaming_scd2
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def test_streaming_scd2_equals_batch(spark, tmp_path_factory):
-    import time as _time
-
     base = tmp_path_factory.mktemp("scd2_stream")
     feed = _orders_feed(spark, SF_SMALL)
 
@@ -27,9 +26,7 @@ def test_streaming_scd2_equals_batch(spark, tmp_path_factory):
     )
     src = base / "stream"
     src.mkdir()
-    for i, s in enumerate(slices):
-        s.coalesce(1).write.parquet(f"{src}/part{i}")
-        _time.sleep(1.1)  # file order = modification time
+    land_batches(slices, src)  # file order = modification time
 
     out, ckpt = str(base / "hist"), str(base / "ckpt")
     cur, chg = str(base / "current"), str(base / "changes")

@@ -9,6 +9,7 @@ from near_real_time_data_warehouse_spark.operators import events as batch_events
 from near_real_time_data_warehouse_spark.streaming import windows as sw
 
 from .conftest import SF_SMALL
+from .fixtures import land_batches
 
 
 def test_hourly_window_stream_equals_batch(spark):
@@ -154,7 +155,6 @@ def test_watermark_drops_late_data(spark, tmp_path_factory):
     at the end of the batch before it, so the late file arrives two
     batches after the watermark-advancing data.)"""
     import datetime as dt
-    import time as _time
 
     import pyspark.sql.types as T
 
@@ -163,17 +163,19 @@ def test_watermark_drops_late_data(spark, tmp_path_factory):
         [T.StructField("event_time", T.TimestampType()), T.StructField("v", T.LongType())]
     )
 
-    def write_file(name, times):
-        spark.createDataFrame(
-            [(t, 1) for t in times], schema
-        ).coalesce(1).write.parquet(f"{base}/{name}")
+    def frame(times):
+        return spark.createDataFrame([(t, 1) for t in times], schema)
 
     d = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
-    write_file("b1", [d(10, 1), d(10, 11), d(10, 21), d(10, 31), d(10, 58)])
-    _time.sleep(1.1)  # file-source ordering is by modification time
-    write_file("b2", [d(10, 59)])  # advances nothing new; watermark now active
-    _time.sleep(1.1)
-    write_file("b3", [d(9, 5)])  # 9:05 < watermark (10:48) -> dropped
+    # file-source ordering is by modification time
+    land_batches(
+        [
+            frame([d(10, 1), d(10, 11), d(10, 21), d(10, 31), d(10, 58)]),
+            frame([d(10, 59)]),  # advances nothing new; watermark now active
+            frame([d(9, 5)]),  # 9:05 < watermark (10:48) -> dropped
+        ],
+        base,
+    )
 
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(
         f"{base}/*"
@@ -197,7 +199,6 @@ def test_dedup_within_watermark_suppresses_resends(spark, tmp_path_factory):
     property), and the kept-per-key count matches the batch dedup's key
     count over the same data."""
     import datetime as dt
-    import time as _time
 
     import pyspark.sql.types as T
 
@@ -210,14 +211,17 @@ def test_dedup_within_watermark_suppresses_resends(spark, tmp_path_factory):
         ]
     )
 
-    def write_file(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(f"{base}/{name}")
-
     d = lambda h, m: dt.datetime(2024, 1, 1, h, m)  # noqa: E731
-    write_file("b1", [(d(10, 0), 1, "click"), (d(10, 1), 2, "view")])
-    _time.sleep(1.1)
-    # duplicates of both keys within the horizon + one new key
-    write_file("b2", [(d(10, 2), 1, "click"), (d(10, 3), 2, "view"), (d(10, 4), 3, "click")])
+    land_batches(
+        [
+            spark.createDataFrame([(d(10, 0), 1, "click"), (d(10, 1), 2, "view")], schema),
+            # duplicates of both keys within the horizon + one new key
+            spark.createDataFrame(
+                [(d(10, 2), 1, "click"), (d(10, 3), 2, "view"), (d(10, 4), 3, "click")], schema
+            ),
+        ],
+        base,
+    )
 
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(f"{base}/*")
     deduped = sw.dedup_within_watermark(stream, ["user_id", "event_type"], "1 hour")
