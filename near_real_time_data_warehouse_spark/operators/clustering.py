@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import memo
+from ..profile import driver_rows, knee_profile
 from . import registry
 from .similarity import (
     _knee_scale,
@@ -145,13 +146,15 @@ def _partial_sums(e: DataFrame, ids: np.ndarray, m: np.ndarray) -> DataFrame:
 
 
 # Above this many rows the trainer runs its distributed Lloyd rounds;
-# at or below it, ONE bounded collect (≤ ~35 MB quantized) replaces
-# init + KMEANS_ROUNDS actions with the identical numpy arithmetic on
-# the driver — the CC_COLLECT_CAP pattern applied to training. Each
-# distributed round costs a full job round-trip (mapInPandas + reduce +
-# AQE replan) regardless of data size, which dominates micro-batch
-# training; a 100 TB corpus exceeds the cap and trains distributed.
-# Tests pin driver ≡ distributed by forcing the cap to 0.
+# at or below it, ONE ``driver_rows`` collect (≤ ~35 MB quantized)
+# replaces init + KMEANS_ROUNDS actions with the identical numpy
+# arithmetic on the driver — the graph kernels' GRAPH_COLLECT_CAP rule
+# applied to training, with a smaller cap because each row is a 64-dim
+# vector. Each distributed round costs a full job round-trip
+# (mapInPandas + reduce + AQE replan) regardless of data size, which
+# dominates micro-batch training; a 100 TB corpus exceeds the cap and
+# trains distributed. Tests pin driver ≡ distributed by forcing the cap
+# to 0.
 DRIVER_LLOYD_CAP = 65536
 
 
@@ -202,14 +205,12 @@ def _train_state_on(e: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     100 TB corpus still fans out to thousands.
 
     Small inputs (micro-batches, test SFs) take the bounded driver fast
-    path: one limit-probed collect instead of count + init + one action
-    per round — see DRIVER_LLOYD_CAP."""
-    from ..profile import knee_profile
-
+    path: one ``driver_rows`` collect instead of count + init + one
+    action per round — see DRIVER_LLOYD_CAP."""
     e = e.select("vec_id", "embedding")
-    head = e.limit(DRIVER_LLOYD_CAP + 1).toPandas()
-    if len(head) <= DRIVER_LLOYD_CAP:
-        return _train_state_driver(head)
+    head = driver_rows(e, DRIVER_LLOYD_CAP)
+    if head is not None:
+        return _train_state_driver(head.to_pandas())
     n = e.count()
     # ~8 B per int64 dim + id, doubled for Arrow/pandas copies.
     rows_per_task = max(1, knee_profile().bytes_per_task // (16 * (EMB_DIM + 1)))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import memo
+from ..profile import driver_rows
 from ..sources.testdata import load_table_parallel
 from . import registry
 from .text import _NORM_SQL, _norm_col
@@ -685,17 +686,17 @@ def _local_checkpoint_stats_clean(df: DataFrame, eager: bool = True) -> DataFram
 # and still converges in ≤ _CC_PLAIN_ROUNDS + O(log diameter) rounds.
 _CC_PLAIN_ROUNDS = 8
 
-# Above this many distinct undirected edges the loop below resolves the
-# graph distributed; at or below it, ONE driver-side union-find action
-# replaces D iterations × (two joins + checkpoint + convergence agg).
-# Same reasoning as QUOTIENT_COLLECT_CAP: the near-dup pair graph is
-# orders of magnitude smaller than the corpus (most docs are
-# singletons and never reach this function's loop), and each
-# distributed round costs seconds of pure scheduling/AQE latency
-# regardless of data size — the round-6 10× sweep spent ~33 rounds ×
-# ~4 s on a graph whose edge list fits in one driver page. Tests pin
-# the distributed loop by monkeypatching this to 0.
-CC_COLLECT_CAP = 500_000
+# The one edge-count cap of the graph kernels (connected_components,
+# merge_components_with_edges, pagerank_stats): an edge list of at most
+# this many rows is collected by ``driver_rows`` and resolved on the
+# driver in one action; a longer one runs the kernel's distributed
+# loop with identical semantics. The operating assumption: the near-dup
+# pair graph is tiny next to the corpus (most docs are singletons), and
+# every distributed round costs seconds of scheduling/AQE latency at any
+# data size — the round-6 10× sweep spent ~33 rounds × ~4 s on a graph
+# whose edge list fits in one driver page. Tests force the distributed
+# loops by monkeypatching this to 0.
+GRAPH_COLLECT_CAP = 500_000
 
 
 def _cc_driver_resolve(
@@ -705,7 +706,9 @@ def _cc_driver_resolve(
     component (union-find over edges whose BOTH endpoints carry a seed —
     unlabeled vertices never relay in the distributed loop, so they must
     not union here either), every member takes the minimum seed label in
-    the component. Returns (doc_id, label) for every seeded vertex."""
+    the component. Returns (doc_id, label) for every seeded vertex. The
+    quotient merge calls it with identity seeds over the quotient's
+    vertices, so each label maps to its merged component's minimum."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -749,9 +752,8 @@ def connected_components(
 ) -> DataFrame:
     """Connected components by hash-min label propagation, with a
     driver-side union-find fast path for graphs whose edge list fits
-    under CC_COLLECT_CAP (the overwhelmingly common case — the verified
-    near-dup pair graph is tiny next to the corpus; see the cap's
-    comment). Distributed semantics: every vertex starts labeled with
+    under GRAPH_COLLECT_CAP (the overwhelmingly common case; see the
+    cap's comment). Distributed semantics: every vertex starts labeled with
     its own id; each round every vertex takes the min of its label and
     its neighbors' labels, then SHORTCUTS through its label's own label
     (pointer doubling); converged when no label shrinks. Plain hash-min needs diameter rounds — the sf1 sweep
@@ -796,7 +798,7 @@ def connected_components(
     else:
         seeds = vertices.select(F.col("doc_id"), F.col("doc_id").alias("label"))
     # Hybrid fast path: if the (deduplicated, undirected) edge list fits
-    # under CC_COLLECT_CAP, one driver-side union-find replaces the
+    # under GRAPH_COLLECT_CAP, one driver-side union-find replaces the
     # whole iterative loop. The seed list it needs is endpoint-sized
     # (≤ 2×edges) — the same "quotient fits on the driver" operating
     # assumption as merge_components_with_edges, which broadcasts the
@@ -806,8 +808,8 @@ def connected_components(
     half = (
         edges.filter(F.col("src") < F.col("dst")).select("src", "dst").distinct()
     )
-    taken = half.take(CC_COLLECT_CAP + 1)
-    if len(taken) <= CC_COLLECT_CAP:
+    taken = driver_rows(half, GRAPH_COLLECT_CAP)
+    if taken is not None:
         # Endpoint set derived ON THE DRIVER from the just-collected edge
         # list (r14: one exchange less per consumer action): edges arrive
         # in both directions, so {src} ∪ {dst} of the canonical half IS
@@ -815,14 +817,14 @@ def connected_components(
         # self-loop, which the resolve would return at their seed label
         # anyway, i.e. exactly the passive leg's row for them. The seed
         # fetch and every consumer's passive leg then probe a broadcast
-        # LOCAL relation (bounded ≤ 2·CC_COLLECT_CAP rows) instead of
+        # LOCAL relation (bounded ≤ 2·GRAPH_COLLECT_CAP rows) instead of
         # re-running an edges-lineage scan + distinct exchange per action.
         spark = vertices.sparkSession
-        ep = _endpoint_frame(spark, (e for r in taken for e in (r.src, r.dst)))
+        src, dst = taken.column("src").to_pylist(), taken.column("dst").to_pylist()
+        ep = _endpoint_frame(spark, src + dst)
         seed_rows = seeds.join(ep, "doc_id", "left_semi").collect()
         resolved_rows = _cc_driver_resolve(
-            [(r.src, r.dst) for r in taken],
-            [(r.doc_id, r.label) for r in seed_rows],
+            list(zip(src, dst)), [(r.doc_id, r.label) for r in seed_rows]
         )
         resolved = spark.createDataFrame(
             resolved_rows, "doc_id long, label long"
@@ -1672,17 +1674,6 @@ def _batch_new_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_pairs_from_arrays(arrs, cand_new).localCheckpoint(eager=False)
 
 
-# Above this many distinct quotient edges, the merge falls back to the
-# distributed propagation; below it, a driver-side union-find resolves
-# the quotient in one action instead of D iterations × (checkpoint +
-# convergence count). The quotient mapping is broadcast back to the
-# executors either way, so "fits in the driver" is already the
-# operating assumption — this just removes the per-fold iteration tax
-# (measured: the quotient CC was most of the 5 s incremental fold at
-# sf0.1 despite the quotient graph having a handful of edges).
-QUOTIENT_COLLECT_CAP = 500_000
-
-
 def merge_components_with_edges(current: DataFrame, new_pairs: DataFrame) -> DataFrame:
     """Union-find step as a quotient-graph CC: ``current`` is
     (doc_id, label) with labels = component-minimum ids (hash-min
@@ -1690,29 +1681,38 @@ def merge_components_with_edges(current: DataFrame, new_pairs: DataFrame) -> Dat
     through the labels, components run on that quotient (vertices ∝
     touched components), and every doc's label is remapped through the
     broadcast-sized result. Min-of-mins keeps the output equal to a
-    from-scratch CC over the union graph."""
+    from-scratch CC over the union graph.
+
+    New pairs that fit under GRAPH_COLLECT_CAP resolve the quotient on
+    the driver with ``_cc_driver_resolve`` in one action instead of
+    D iterations × (checkpoint + convergence agg) — the quotient CC was
+    most of the 5 s incremental fold at sf0.1 although its graph had a
+    handful of edges. The quotient mapping is broadcast back either
+    way, so "fits on the driver" is already the operating assumption."""
     spark = current.sparkSession
     # Driver-first (r14): probe the NEW pairs directly — when they fit
     # under the cap (the operating assumption the quotient path already
     # makes), the edge→label mapping needs ONE bounded scan of
     # ``current`` semi-filtered by a broadcast local endpoint relation,
-    # instead of two full lmap join legs + a distinct exchange feeding
-    # the old take. The mapped/deduplicated quotient edges are then pure
+    # instead of two full lmap join legs + a distinct exchange ahead of
+    # the probe. The mapped/deduplicated quotient edges are then pure
     # driver arithmetic; results are bit-identical (same label pairs,
     # same DSU).
-    pair_rows = new_pairs.select("doc_a", "doc_b").take(QUOTIENT_COLLECT_CAP + 1)
-    if len(pair_rows) <= QUOTIENT_COLLECT_CAP:
-        ep = _endpoint_frame(spark, (e for r in pair_rows for e in (r.doc_a, r.doc_b)))
+    taken = driver_rows(new_pairs.select("doc_a", "doc_b"), GRAPH_COLLECT_CAP)
+    if taken is not None:
+        doc_a, doc_b = taken.column("doc_a").to_pylist(), taken.column("doc_b").to_pylist()
+        ep = _endpoint_frame(spark, doc_a + doc_b)
         lab = {
             r["doc_id"]: r["label"]
             for r in current.join(ep, "doc_id", "left_semi").collect()
         }
         qedges = {
-            (lab[r.doc_a], lab[r.doc_b])
-            for r in pair_rows
-            if r.doc_a in lab and r.doc_b in lab and lab[r.doc_a] != lab[r.doc_b]
+            (lab[a], lab[b])
+            for a, b in zip(doc_a, doc_b)
+            if a in lab and b in lab and lab[a] != lab[b]
         }
-        qcomp_rows = _union_find_min(sorted(qedges))
+        qvertices = sorted({v for e in qedges for v in e})
+        qcomp_rows = _cc_driver_resolve(sorted(qedges), [(v, v) for v in qvertices])
         if not qcomp_rows:
             return current.select("doc_id", F.col("label").alias("component"))
         qcomp = spark.createDataFrame(qcomp_rows, "label long, qcomp long")
@@ -1740,31 +1740,6 @@ def merge_components_with_edges(current: DataFrame, new_pairs: DataFrame) -> Dat
     return current.join(F.broadcast(qcomp), "label", "left").select(
         "doc_id", F.coalesce("qcomp", "label").alias("component")
     )
-
-
-def _union_find_min(edges: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    """Classic DSU over the quotient edges; returns (label, min-label in
-    its merged component) rows — preserving the hash-min invariant that
-    labels are component-minimum ids."""
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comp_min: dict[int, int] = {}
-    for x in parent:
-        r = find(x)
-        comp_min[r] = min(comp_min.get(r, x), x)
-    return [(x, comp_min[find(x)]) for x in parent]
 
 
 INCREMENTAL_SQL = f"""
@@ -2254,45 +2229,33 @@ def _pr_round(
     )
 
 
-# PageRank twin of CC_COLLECT_CAP: an edge list at or under the cap is
-# resolved by PR_ITERATIONS exact-integer numpy rounds on the driver —
-# one bounded take + one endpoint-sized membership collect instead of
-# (deg build + PR_ITERATIONS × (join + grouped sum + checkpoint)). The
-# near-dup pair graph is orders of magnitude smaller than the corpus
-# (the same operating assumption the CC driver path already makes);
-# past the cap the distributed loop below runs with identical
-# semantics. Tests pin driver ≡ distributed by forcing the cap to 0.
-PR_COLLECT_CAP = CC_COLLECT_CAP
-
-
-def _pagerank_driver(
-    spark: SparkSession, vertices: DataFrame, pair_rows: list
-) -> DataFrame:
-    """Exact-integer PageRank on a collected pair list — replicates the
-    distributed loop bit-for-bit: undirected degree counts EVERY edge
-    row (multiplicity preserved — pairs are fed as-is, exactly like the
-    distributed union), ranks exist only for vertices-∩-endpoints, each
-    round is floor(rank/deg) pushed both ways, summed at dst, damped
-    with the same integer expression. Passive (edge-free) vertices
-    rejoin lazily with the closed-form PR_BASE."""
-    src = np.fromiter((r[0] for r in pair_rows), dtype=np.int64, count=len(pair_rows))
-    dst = np.fromiter((r[1] for r in pair_rows), dtype=np.int64, count=len(pair_rows))
+def _pagerank_driver(spark: SparkSession, vertices: DataFrame, pairs) -> DataFrame:
+    """Exact-integer PageRank on a collected (doc_a, doc_b) Arrow table:
+    PR_ITERATIONS numpy rounds plus one endpoint-sized membership collect
+    instead of (deg build + PR_ITERATIONS × (join + grouped sum +
+    checkpoint)). Replicates the distributed loop bit-for-bit:
+    undirected degree counts EVERY edge row (multiplicity preserved —
+    pairs are fed as-is, exactly like the distributed union), ranks
+    exist only for vertices-∩-endpoints, each round is floor(rank/deg)
+    pushed both ways, summed at dst, damped with the same integer
+    expression. Passive (edge-free) vertices rejoin lazily with the
+    closed-form PR_BASE."""
+    src = pairs.column("doc_a").to_numpy().astype(np.int64)
+    dst = pairs.column("doc_b").to_numpy().astype(np.int64)
     ids = np.unique(np.concatenate([src, dst]))
-    endpoints_df = spark.createDataFrame(
-        [(int(v),) for v in ids], "doc_id long"
+    endpoints_df = _endpoint_frame(spark, ids.tolist())
+    active = (
+        vertices.join(endpoints_df, "doc_id", "left_semi")
+        .toArrow()
+        .column("doc_id")
+        .to_numpy()
+        .astype(np.int64)
     )
-    active_rows = vertices.join(endpoints_df, "doc_id", "left_semi").collect()
-    active = np.fromiter(
-        (r["doc_id"] for r in active_rows), dtype=np.int64, count=len(active_rows)
-    )
-    pos = {int(v): i for i, v in enumerate(ids)}
-    si = np.fromiter((pos[int(v)] for v in src), dtype=np.int64, count=len(src))
-    di = np.fromiter((pos[int(v)] for v in dst), dtype=np.int64, count=len(dst))
+    si, di = np.searchsorted(ids, src), np.searchsorted(ids, dst)
     # both directions, exactly like the distributed union
     si, di = np.concatenate([si, di]), np.concatenate([di, si])
     deg = np.bincount(si, minlength=len(ids)).astype(np.int64)
-    is_active = np.zeros(len(ids), dtype=bool)
-    is_active[[pos[int(v)] for v in active]] = True
+    is_active = np.isin(ids, active)
     rank = np.where(is_active, np.int64(PR_SCALE), np.int64(0))
     for _ in range(PR_ITERATIONS):
         contrib = np.where(is_active[si], rank[si] // deg[si], np.int64(0))
@@ -2301,9 +2264,8 @@ def _pagerank_driver(
         rank = np.where(
             is_active, PR_BASE + (PR_DAMP_NUM * inc) // 100, np.int64(0)
         )
-    out = [
-        (int(v), int(deg[pos[int(v)]]), int(rank[pos[int(v)]])) for v in active
-    ]
+    at = np.searchsorted(ids, active)
+    out = list(zip(active.tolist(), deg[at].tolist(), rank[at].tolist()))
     resolved = spark.createDataFrame(out, "doc_id long, degree long, rank long")
     passive = vertices.join(endpoints_df, "doc_id", "left_anti").select(
         "doc_id",
@@ -2326,13 +2288,11 @@ def pagerank_stats(vertices: DataFrame, pairs: DataFrame) -> DataFrame:
     constant base PR_BASE — the (at 100 TB, overwhelming) singleton
     majority of the corpus bypasses every propagation shuffle and
     rejoins at the end with that closed form. Per-round cost ∝ edges,
-    not ∝ corpus. Edge lists under PR_COLLECT_CAP resolve on the driver
-    (see _pagerank_driver)."""
-    taken = pairs.select("doc_a", "doc_b").take(PR_COLLECT_CAP + 1)
-    if len(taken) <= PR_COLLECT_CAP:
-        return _pagerank_driver(
-            pairs.sparkSession, vertices, [(r["doc_a"], r["doc_b"]) for r in taken]
-        )
+    not ∝ corpus. Edge lists under GRAPH_COLLECT_CAP resolve on the
+    driver (see _pagerank_driver)."""
+    taken = driver_rows(pairs.select("doc_a", "doc_b"), GRAPH_COLLECT_CAP)
+    if taken is not None:
+        return _pagerank_driver(pairs.sparkSession, vertices, taken)
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(

@@ -1,4 +1,5 @@
-"""Deployment profile for the engine's scan-size knees (VERDICT r11 #5).
+"""Deployment profile for the engine's size knees (VERDICT r11 #5), and
+the one bounded probe that decides whether a kernel runs on the driver.
 
 Several operators insert an explicit exchange whose partition count is a
 KNEE over scanned bytes — one partition per ~N bytes of input — so that
@@ -30,12 +31,22 @@ Defaults reproduce the tuned single-host plans byte-for-byte:
 Env overrides (integers, read at first use):
 SPARK_GRAFT_KNEE_BYTES_PER_TASK, SPARK_GRAFT_KNEE_TEXT_BYTES_PER_TASK,
 SPARK_GRAFT_KNEE_MIN_PARTITIONS, SPARK_GRAFT_KNEE_MAX_PARTITIONS.
+
+The row-count knee is ``driver_rows``: the graph kernels (connected
+components, the quotient merge, PageRank) and the Lloyd trainer each
+collect an input that fits under their cap and resolve it on the driver
+in one action, and run their distributed loop otherwise.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+    from pyspark.sql import DataFrame
 
 
 @dataclass(frozen=True)
@@ -76,3 +87,13 @@ def knee_profile() -> KneeProfile:
             max_partitions=env("SPARK_GRAFT_KNEE_MAX_PARTITIONS", d.max_partitions),
         )
     return _ACTIVE
+
+
+def driver_rows(df: DataFrame, cap: int) -> pa.Table | None:
+    """``df`` as an Arrow table when it holds at most ``cap`` rows, else
+    None. One Spark job either way: ``limit(cap + 1)`` bounds what the
+    driver receives, so a frame past the cap costs at most ``cap + 1``
+    rows before its caller goes distributed. An empty frame always fits,
+    even at cap 0."""
+    t = df.limit(cap + 1).toArrow()
+    return t if t.num_rows <= cap else None

@@ -14,7 +14,7 @@ def test_connected_components_raises_when_iteration_capped(spark, monkeypatch):
     # union-find fast path is exact in one action and never caps.)
     from near_real_time_data_warehouse_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 0)
+    monkeypatch.setattr(dedup, "GRAPH_COLLECT_CAP", 0)
     vertices = spark.range(6).withColumnRenamed("id", "doc_id")
     chain = [(i, i + 1) for i in range(5)]
     edges = spark.createDataFrame(
@@ -27,7 +27,7 @@ def test_connected_components_raises_when_iteration_capped(spark, monkeypatch):
     assert {r.component for r in labels.collect()} == {0}
 
 
-def test_seeded_components_equal_unseeded(spark):
+def test_seeded_components_equal_unseeded(spark, monkeypatch):
     """Seeding the propagation with stored labels (the incremental
     path's quotient trick) must land on the same fixpoint as starting
     from identity labels, because hash-min labels are component minima
@@ -52,19 +52,15 @@ def test_seeded_components_equal_unseeded(spark):
     # and the distributed path agrees on the seeded graph too
     from near_real_time_data_warehouse_spark.operators import dedup
 
-    orig = dedup.CC_COLLECT_CAP
-    try:
-        dedup.CC_COLLECT_CAP = 0
-        got_dist = {
-            (r.doc_id, r.component)
-            for r in connected_components(seeded, edges).collect()
-        }
-    finally:
-        dedup.CC_COLLECT_CAP = orig
+    monkeypatch.setattr(dedup, "GRAPH_COLLECT_CAP", 0)
+    got_dist = {
+        (r.doc_id, r.component)
+        for r in connected_components(seeded, edges).collect()
+    }
     assert got_dist == want
 
 
-def test_cc_driver_endpoints_cover_selfloops_and_foreign(spark):
+def test_cc_driver_endpoints_cover_selfloops_and_foreign(spark, monkeypatch):
     """r14: the CC fast path derives the endpoint set on the driver from
     the collected canonical half (src < dst), which drops self-loops —
     a vertex whose ONLY edge is a self-loop must still come back at its
@@ -90,21 +86,17 @@ def test_cc_driver_endpoints_cover_selfloops_and_foreign(spark):
         (r.doc_id, r.component)
         for r in connected_components(seeded, edges).collect()
     }
-    orig = dedup.CC_COLLECT_CAP
-    try:
-        dedup.CC_COLLECT_CAP = 0
-        want = {
-            (r.doc_id, r.component)
-            for r in connected_components(seeded, edges).collect()
-        }
-    finally:
-        dedup.CC_COLLECT_CAP = orig
+    monkeypatch.setattr(dedup, "GRAPH_COLLECT_CAP", 0)
+    want = {
+        (r.doc_id, r.component)
+        for r in connected_components(seeded, edges).collect()
+    }
     assert got == want
     assert {d for d, _ in got} == set(range(6))  # no foreign rows, none lost
     assert (2, 0) in got  # self-loop-only vertex keeps its seed label
 
 
-def test_quotient_merge_driver_first_matches_distributed(spark):
+def test_quotient_merge_driver_first_matches_distributed(spark, monkeypatch):
     """r14: merge_components_with_edges resolves the quotient on the
     driver from the RAW pair probe (one bounded label fetch) — pairs with
     foreign endpoints are dropped exactly as the old lmap inner joins
@@ -124,15 +116,11 @@ def test_quotient_merge_driver_first_matches_distributed(spark):
         (r.doc_id, r.component)
         for r in dedup.merge_components_with_edges(current, pairs).collect()
     }
-    orig = dedup.QUOTIENT_COLLECT_CAP
-    try:
-        dedup.QUOTIENT_COLLECT_CAP = 0
-        want = {
-            (r.doc_id, r.component)
-            for r in dedup.merge_components_with_edges(current, pairs).collect()
-        }
-    finally:
-        dedup.QUOTIENT_COLLECT_CAP = orig
+    monkeypatch.setattr(dedup, "GRAPH_COLLECT_CAP", 0)
+    want = {
+        (r.doc_id, r.component)
+        for r in dedup.merge_components_with_edges(current, pairs).collect()
+    }
     assert got == want
     assert got == {(0, 0), (1, 0), (2, 0), (3, 0), (4, 4)}
 
@@ -321,7 +309,7 @@ def test_connected_components_converges_on_long_chain(spark, monkeypatch):
     from pyspark.sql import functions as F
     from near_real_time_data_warehouse_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "CC_COLLECT_CAP", 0)
+    monkeypatch.setattr(dedup, "GRAPH_COLLECT_CAP", 0)
 
     n = 2000
     verts = spark.range(0, n).select(F.col("id").alias("doc_id"))
@@ -336,7 +324,7 @@ def test_connected_components_converges_on_long_chain(spark, monkeypatch):
     assert {r.component for r in got} == {0}
 
 
-def test_unlabeled_edge_endpoints_never_relay(spark):
+def test_unlabeled_edge_endpoints_never_relay(spark, monkeypatch):
     """Edges touching a vertex NOT in the vertices input must not merge
     components through it: the distributed loop only propagates through
     labeled rows, and the driver fast path unions only edges with both
@@ -355,15 +343,11 @@ def test_unlabeled_edge_endpoints_never_relay(spark):
         for r in connected_components(vertices, edges).collect()
     }
     assert got == want
-    orig = dedup.CC_COLLECT_CAP
-    try:
-        dedup.CC_COLLECT_CAP = 0
-        got_dist = {
-            (r.doc_id, r.component)
-            for r in connected_components(vertices, edges).collect()
-        }
-    finally:
-        dedup.CC_COLLECT_CAP = orig
+    monkeypatch.setattr(dedup, "GRAPH_COLLECT_CAP", 0)
+    got_dist = {
+        (r.doc_id, r.component)
+        for r in connected_components(vertices, edges).collect()
+    }
     assert got_dist == want
 
 
@@ -744,7 +728,7 @@ def test_pagerank_driver_path_matches_distributed(spark, monkeypatch):
         (r.doc_id, r.degree, r.rank)
         for r in dedup.pagerank_stats(vertices, pairs).collect()
     }
-    monkeypatch.setattr(dedup, "PR_COLLECT_CAP", 0)
+    monkeypatch.setattr(dedup, "GRAPH_COLLECT_CAP", 0)
     want = {
         (r.doc_id, r.degree, r.rank)
         for r in dedup.pagerank_stats(vertices, pairs).collect()

@@ -15,6 +15,7 @@ under a minute.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -77,15 +78,13 @@ def test_connected_components_matches_union_find(spark, n_nodes, edge_picks):
     # distributed label-propagation path (cap forced to 0) — identical
     from near_real_time_data_warehouse_spark.operators import dedup
 
-    orig_cap = dedup.CC_COLLECT_CAP
-    try:
-        dedup.CC_COLLECT_CAP = 0
+    # (@given rejects function-scoped fixtures, hence the context form)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(dedup, "GRAPH_COLLECT_CAP", 0)
         got_dist = {
             r.doc_id: r.component
             for r in connected_components(vertices, edge_df).collect()
         }
-    finally:
-        dedup.CC_COLLECT_CAP = orig_cap
     assert got_dist == want
 
 
@@ -398,13 +397,14 @@ from hypothesis import strategies as st
     )
 )
 def test_union_find_min_matches_bruteforce(edges):
-    """_union_find_min (the driver-side quotient resolver) must agree
-    with a brute-force reachability closure: every touched label maps to
-    the minimum label of its connected component."""
-    from near_real_time_data_warehouse_spark.operators.dedup import _union_find_min
+    """_cc_driver_resolve with identity seeds (how the quotient merge
+    calls it) must agree with a brute-force reachability closure: every
+    touched label maps to the minimum label of its connected component."""
+    from near_real_time_data_warehouse_spark.operators.dedup import _cc_driver_resolve
 
     edges = [(a, b) for a, b in edges if a != b]
-    got = dict(_union_find_min(edges))
+    touched = sorted({v for e in edges for v in e})
+    got = dict(_cc_driver_resolve(edges, [(v, v) for v in touched]))
     # brute force: adjacency closure over the touched vertices
     adj = {}
     for a, b in edges:
