@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import memo
-from ..profile import driver_rows, knee_profile
+from ..profile import BYTES_PER_TASK, driver_rows
 from . import registry
 from .similarity import (
     _knee_scale,
@@ -60,7 +60,7 @@ from .similarity import (
 
 K_CLUSTERS = 8      # latent domains at/below the corpus-size knee
 KMEANS_ROUNDS = 4   # Lloyd updates (fixed — the oracle chains one CTE block each)
-# Knee for the domain count (the standard √N discipline _ann_planes and
+# Knee for the domain count (the standard √N discipline _plane_depth and
 # _ivf_centroids already follow): a FIXED K=8 at 100 TB would average
 # corpora of billions of documents into 8 means — domain discovery wants
 # K to grow with corpus character. Below the knee (every oracle-tested
@@ -213,7 +213,7 @@ def _train_state_on(e: DataFrame) -> tuple[np.ndarray, np.ndarray]:
         return _train_state_driver(head.to_pandas())
     n = e.count()
     # ~8 B per int64 dim + id, doubled for Arrow/pandas copies.
-    rows_per_task = max(1, knee_profile().bytes_per_task // (16 * (EMB_DIM + 1)))
+    rows_per_task = max(1, BYTES_PER_TASK // (16 * (EMB_DIM + 1)))
     n_tasks = max(1, -(-n // rows_per_task))
     e = e.coalesce(n_tasks)
     ids, m = _init_state_on(e, n)

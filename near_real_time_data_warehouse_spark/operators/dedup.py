@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import memo
-from ..profile import driver_rows
+from ..profile import driver_rows, scan_partitions
 from ..sources.testdata import load_table_parallel
 from . import registry
 from .text import _NORM_SQL, _norm_col
@@ -1820,32 +1820,19 @@ RARE_DF_MIN = 2      # df=1 shingles cannot produce a pair
 RARE_DF_MAX = 5
 
 
-def _containment_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Scan-size knee for the containment kernel's exchanges: the
-    candidate-generation self-join and the verification joins sort
-    shingle-table slices whose per-task runs grow ∝ corpus at a fixed
-    partition count (2.7 GB disk spill at the 100× probe, VERDICT r10
-    #8). The knee divides the scanned documents-parquet bytes by 256 KB:
-    compressed text explodes ~50× into the shingle table (measured at
-    the 100× probe: 60 MB of parquet → 3.1 GB of verification shuffle),
-    so ~256 KB of parquet ≈ ~13 MB of per-task sort run — bounded at any
-    SF. Rates/floor/cap come from the deployment profile (the
-    compressed-text rate), defaults reproducing today's plans."""
-    from ..plans.analysis import _local_scan_bytes
-    from ..profile import knee_profile
-
-    return knee_profile().partitions(
-        _local_scan_bytes(_docs(spark, sf_dir)), text=True
-    )
-
-
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment pairs over the full corpus: candidates
     from the rare-shingle inverted index, verified with exact shingle
-    counts; emits both direction ratios and a direction verdict."""
+    counts; emits both direction ratios and a direction verdict.
+
+    The candidate self-join and the verification joins sort shingle-table
+    slices whose per-task runs grow ∝ corpus at a fixed partition count
+    (2.7 GB disk spill at the 100× probe, VERDICT r10 #8), so their
+    exchanges take the compressed-text scan-size knee over the documents
+    parquet: ~256 KB of parquet ≈ ~13 MB of per-task sort run."""
     return containment_pairs(
         _shingles_materialized(spark, sf_dir),
-        n_parts=_containment_partitions(spark, sf_dir),
+        n_parts=scan_partitions(_docs(spark, sf_dir), text=True),
         arrs=_arrays_materialized(spark, sf_dir),
     )
 

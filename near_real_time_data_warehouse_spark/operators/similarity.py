@@ -446,12 +446,14 @@ def _bucketed(
 ANN_TARGET_N = 8192
 
 
-def _ann_planes(n: int) -> int:
+def _plane_depth(n: int, base: int, target: int) -> int:
+    """LSH plane depth for an n-vector corpus: ``base`` up to ``target``
+    vectors, +1 per corpus doubling past it (bucket count ∝ n)."""
     import math
 
-    if n <= ANN_TARGET_N:
-        return N_PLANES
-    return N_PLANES + math.ceil(math.log2(n / ANN_TARGET_N))
+    if n <= target:
+        return base
+    return base + math.ceil(math.log2(n / target))
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,7 +493,7 @@ def _lsh_corpus_bucketed(spark: SparkSession, sf_dir: str) -> tuple[int, DataFra
     corpus through the bucketing kernel. At cluster scale this is the
     persisted index table an ANN service maintains; bench bills the cold
     build under ann_index_build with the other shared ANN state."""
-    n_planes = _ann_planes(_emb_count(spark, sf_dir))
+    n_planes = _plane_depth(_emb_count(spark, sf_dir), N_PLANES, ANN_TARGET_N)
     # carry_all (the per-vec bucket list across all tables) rides in the
     # index so the query path can emit each candidate pair exactly once
     # — at its first agreeing table — instead of DISTINCTing (r14 second
@@ -1338,16 +1340,6 @@ SEM_PLANES = 8
 SEM_TARGET_N = 8192
 
 
-def _sem_planes(n: int) -> int:
-    """Plane depth for an n-vector corpus: SEM_PLANES below the target
-    occupancy knee, +1 per doubling past it (bucket count ∝ n)."""
-    import math
-
-    if n <= SEM_TARGET_N:
-        return SEM_PLANES
-    return SEM_PLANES + math.ceil(math.log2(n / SEM_TARGET_N))
-
-
 def semantic_text_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage cross-modal near-dup detection — the shape production
     semantic dedup actually runs: EMBEDDING-LSH candidate generation
@@ -1373,7 +1365,12 @@ def semantic_text_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _local_checkpoint_stats_clean
 
     b = _local_checkpoint_stats_clean(
-        _bucketed(e, n_tables=SEM_TABLES, n_planes=_sem_planes(e.count()), carry_all=True),
+        _bucketed(
+            e,
+            n_tables=SEM_TABLES,
+            n_planes=_plane_depth(e.count(), SEM_PLANES, SEM_TARGET_N),
+            carry_all=True,
+        ),
         eager=False,
     )
     # Emit each pair exactly once — at its FIRST agreeing table — by

@@ -39,6 +39,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..profile import scan_bytes, scan_partitions
 from .star import CURRENT_DATE, CURRENT_YEAR
 
 Star = dict[str, DataFrame]
@@ -481,44 +482,6 @@ FROM per_group WHERE n_months > 1
 Q16_ONEPASS_BYTES = 500_000_000
 
 
-def _local_scan_bytes(df: DataFrame) -> int:
-    """Total on-disk size of the local files feeding a DataFrame's scans —
-    a zero-job SF proxy for plan delegation. Non-file sources (JDBC,
-    views over streams) report 0: delegation then stays off and the
-    faithful plan runs, which is the conservative default; a cluster
-    deployment overrides via Q16_ONEPASS_BYTES-style env configuration.
-    Persisted DataFrames hide their scans behind InMemoryRelation, so
-    star_tables stamps ``_graft_scan_bytes`` pre-persist and it wins."""
-    import os
-
-    stamped = getattr(df, "_graft_scan_bytes", None)
-    if stamped is not None:
-        return stamped
-    total = 0
-    for uri in df.inputFiles():
-        path = uri[5:] if uri.startswith("file:") else uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            pass
-    return total
-
-
-def _pair_partitions(star: Star) -> int:
-    """Partition count for the market-basket pair re-aggregation. The
-    distinct-pair hash state grows ∝ corpus (~90M pairs at the 100×
-    probe) while the session's shuffle partitions stay fixed, so at 32
-    partitions each reduce task's aggregation map outgrows its memory
-    share and spill-merges. One partition per ~8 MB of scanned fact
-    keeps every task's map a few MB at any SF — the same data-adaptive
-    knee discipline as the IVF nlist / LSH plane depth. Rates, floor,
-    and cap come from the deployment profile (profile.knee_profile);
-    the defaults reproduce the tuned single-host plans byte-for-byte."""
-    from ..profile import knee_profile
-
-    return knee_profile().partitions(_local_scan_bytes(star["salefact"]))
-
-
 def q16(star: Star) -> DataFrame:
     """Top 5 product pairs purchased together (Analysis_Queries.sql:128-137):
     self-join on order_id with a ``<`` theta residual — equi on the order
@@ -530,11 +493,7 @@ def q16(star: Star) -> DataFrame:
     product) multiplicities instead of raw rows and knee-partitions the
     pair re-aggregation (the faithful raw-row plan sort-spills 9.4 GB at
     the 50× probe; the kernel's sorts are megabytes per task)."""
-    import os
-
-    env = os.environ.get("Q16_ONEPASS_BYTES")
-    threshold = int(env) if env else Q16_ONEPASS_BYTES
-    if _local_scan_bytes(star["salefact"]) > threshold:
+    if scan_bytes(star["salefact"]) > Q16_ONEPASS_BYTES:
         return star_basket_onepass(star)
     f = star["salefact"].select("order_id", "product_id")
     a, b = f.alias("a"), f.alias("b")
@@ -967,7 +926,7 @@ def star_basket_onepass(star: Star) -> DataFrame:
     knees. (At driver SFs the knee floors to the session count, so the
     exchange it introduces is the one EnsureRequirements would have
     inserted anyway.)"""
-    n_parts = _pair_partitions(star)
+    n_parts = scan_partitions(star["salefact"])
     f = star["salefact"].select("order_id", "product_id")
     counts = (
         f.repartition(n_parts, "order_id")
@@ -1013,7 +972,7 @@ def star_basket_rules(star: Star) -> DataFrame:
     bounded constants. The oracle uses the faithful self-join form, so
     the hash also certifies kernel ≡ join equivalence at distinct
     grain."""
-    n_parts = _pair_partitions(star)
+    n_parts = scan_partitions(star["salefact"])
     f = (
         star["salefact"]
         .select("order_id", "product_id")

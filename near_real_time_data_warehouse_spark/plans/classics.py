@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import registry
+from ..profile import scan_partitions
 from ..sources.testdata import load_tables
 
 
@@ -586,18 +587,6 @@ WHERE s_suppkey IN (SELECT l_suppkey FROM qualifying)
 """
 
 
-def _order_key_partitions(df: DataFrame) -> int:
-    """Scan-size knee for order-key exchanges (one partition per ~8 MB of
-    scanned input, floored at the session default, capped for the single
-    host) — keeps sort-merge runs and aggregation maps a few MB per task
-    at any SF instead of growing ∝ corpus at a fixed partition count.
-    Rates/floor/cap come from the deployment profile."""
-    from ..profile import knee_profile
-    from .analysis import _local_scan_bytes
-
-    return knee_profile().partitions(_local_scan_bytes(df))
-
-
 def waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape — suppliers who were the SOLE late supplier on a
     multi-supplier order ("late" = shipped >365 days after the order
@@ -618,7 +607,7 @@ def waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the "other supplier" semi leg. At driver SFs the knee floors
     # to the session count, so these are the exchanges EnsureRequirements
     # would have inserted anyway.
-    n_parts = _order_key_partitions(t["lineitem"])
+    n_parts = scan_partitions(t["lineitem"])
     li = (
         t["lineitem"]
         .select("l_orderkey", "l_suppkey", "l_shipdate")

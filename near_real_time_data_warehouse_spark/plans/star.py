@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..functions.timedim import DUCKDB_TIME_ATTRS_SQL, time_attributes
+from ..profile import persist_sized
 from ..sources.testdata import load_tables
 
 # Age-bucket lower bounds from the reference customer master
@@ -175,24 +176,12 @@ def build_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 
 def star_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Cached, persisted star tables for query serving.
-
-    Each persisted DataFrame carries ``_graft_scan_bytes`` — the on-disk
-    size of the files its UNPERSISTED plan scans — because persist()
-    swaps InMemoryRelation into the analyzed plan and ``inputFiles()``
-    then reports nothing, which would silently disable size-based plan
-    delegation (analysis._local_scan_bytes / q16's onepass routing)."""
+    """Cached, persisted star tables for query serving, each still sized
+    by the files it scans (``profile.persist_sized``), so the scan-size
+    knees and q16's routing see through the persist."""
 
     def build() -> dict[str, DataFrame]:
-        from .analysis import _local_scan_bytes
-
-        star = {}
-        for name, df in build_star(spark, sf_dir).items():
-            nbytes = _local_scan_bytes(df)
-            p = df.persist()
-            p._graft_scan_bytes = nbytes  # noqa: SLF001
-            star[name] = p
-        return star
+        return {name: persist_sized(df) for name, df in build_star(spark, sf_dir).items()}
 
     return memo.cached(spark, "star", (sf_dir,), build)
 

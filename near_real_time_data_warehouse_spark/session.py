@@ -100,25 +100,15 @@ def get_spark(app_name: str = "nrtdw_spark", shuffle_partitions: int | None = No
         # no query mutates shared session state mid-run — operators only
         # re-assert it for foreign sessions (e.g. the driver's).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # ContextCleaner hygiene for long sessions relies on the JVM's
-        # periodic GC (spark.cleaner.periodicGC.interval, default 30min).
-        # A 2min override was A/B-tested in r13 and REJECTED: the forced
-        # full collection pauses the 16 GB driver 2-5 s, and whichever
-        # entries it lands on inflate past what best-of-2 can hide
-        # (stream_pca_fold 4.4 → 13.8 s min-of-2). The late-session
-        # broadcast accumulation that motivated it was fixed at the
-        # source instead (similarity._query_block: one broadcast per
-        # session). Override available for multi-hour deployments:
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30min"),
-        )
+        # spark.cleaner.periodicGC.interval keeps Spark's 30min default: a
+        # 2min interval was A/B-tested in r13 and rejected (the forced full
+        # GC paused the 16 GB driver 2-5 s; stream_pca_fold 4.4 → 13.8 s).
     )
     # Shuffle/spill scratch on the fastest local storage available —
     # the standard cluster practice (local NVMe), here the RAM-backed
     # tmpfs: bench totals swung ±2-4 s run-to-run on exactly the
     # state-I/O-heavy entries while the CPU calibration stayed flat,
-    # i.e. /tmp's backing disk is the noisy resource. Periodic GC (above)
+    # i.e. /tmp's backing disk is the noisy resource. Spark's periodic GC
     # keeps the ContextCleaner deleting finished shuffle files, so
     # occupancy stays a few hundred MB. Env-overridable
     # (SPARK_GRAFT_LOCAL_DIR always wins); the /dev/shm DEFAULT is

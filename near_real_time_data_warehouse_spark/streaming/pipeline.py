@@ -94,7 +94,6 @@ def run_streaming_etl_with_retry(
     checkpoint_dir: str,
     orphans_dir: str,
     max_files_per_trigger: int | None = None,
-    on_batch=None,
 ) -> None:
     """Streaming ETL with late-arriving-dimension handling: transactions
     whose customer has no master row are PARKED (raw shape) instead of
@@ -102,27 +101,22 @@ def run_streaming_etl_with_retry(
     current master — so a master refresh between drains rescues
     previously-orphaned facts (the reference drops them forever).
 
-    Facts stay exactly-once (per-epoch overwrite in load_star_batch).
-    The parked set is recomputed and overwritten each batch from
-    deterministic inputs; under a crash between the orphan write and the
-    checkpoint commit, the replayed union can double a parked line until
-    it loads — production would key parked rows by (source file, offset)
-    to close that window.
+    Masters are ordinary files that change on disk, and every batch
+    re-checks the resident masters against their files, so an SCD update
+    published mid-query flows into the very next batch's join.
 
-    ``on_batch(epoch_id)``, if given, runs at the top of every
-    micro-batch — the injection seam the mid-query master-refresh test
-    uses to swap the master file between batches of ONE streaming
-    query. Production needs no hook: masters are ordinary files that
-    change on disk, and every batch re-checks the resident masters
-    against their files, so an SCD update published mid-query flows into
-    the very next batch's join."""
+    The parked set is recomputed and overwritten each batch. A crash
+    after the parked write and before the checkpoint commit breaks
+    exactly-once: the replay reads the already-rewritten parked set, so
+    the rows that epoch rescued are missing from its overwritten fact
+    partition (lost), and the orphans it parked are parked twice.
+    Keying parked rows by (source file, line), or writing them per
+    epoch, closes it."""
     stream = read_transactions(
         spark, transactions_dir, streaming=True, max_files_per_trigger=max_files_per_trigger
     )
 
     def sink(s: SparkSession, batch: DataFrame, epoch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(epoch_id)
         # The resident masters, re-checked against their files per batch:
         # a refresh is what rescues orphans.
         cust = read_customer_master(s, customer_master_path)

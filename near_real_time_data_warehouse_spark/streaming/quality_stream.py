@@ -30,14 +30,6 @@ from pyspark.sql import functions as F
 
 from .fold import overwrite_partitions, run_concurrent
 
-_PRED_RULES = (
-    "l_quantity_between_1_50",
-    "l_quantity_gt_45_audit",
-    "l_discount_between_0_0p1",
-    "l_shipdate_not_null",
-)
-
-
 def _batch_rule_rows(batch: DataFrame, orders: DataFrame) -> DataFrame:
     """Batch-local rule rows: the four row predicates in one scan plus
     the FK anti join — (rule, n_violations, sample_key)."""

@@ -71,7 +71,7 @@ def test_q16_delegates_to_onepass_above_threshold(star, monkeypatch):
     threshold) the faithful raw-row self-join plan stands."""
     faithful = analysis.QUERIES["q16_market_basket_pairs"].spark(star)
     assert "Join" in plan_of(faithful)  # sf0.001 is far below threshold
-    monkeypatch.setenv("Q16_ONEPASS_BYTES", "1")
+    monkeypatch.setattr(analysis, "Q16_ONEPASS_BYTES", 1)
     delegated = analysis.QUERIES["q16_market_basket_pairs"].spark(star)
     onepass = analysis.QUERIES["star_basket_pairs_onepass"].spark(star)
 

@@ -1,37 +1,35 @@
-"""Deployment knee profile: defaults reproduce the tuned single-host
-arithmetic byte-for-byte; env overrides rewire every knee site."""
+"""The scan-size knee: the constants reproduce the tuned single-host
+arithmetic byte-for-byte, and a persisted frame keeps its scan size."""
 
 from __future__ import annotations
 
-from near_real_time_data_warehouse_spark.profile import KneeProfile, knee_profile
+import shutil
+
+import near_real_time_data_warehouse_spark.profile as prof
 
 
-def test_default_profile_reproduces_tuned_knees():
-    p = KneeProfile()
-    for scan_bytes in (0, 1, 10 << 20, 300 << 20, 3 << 40):
-        assert p.partitions(scan_bytes) == max(
-            32, min(4096, scan_bytes // (8 << 20))
+def test_default_profile_reproduces_tuned_knees(monkeypatch):
+    for nbytes in (0, 1, 10 << 20, 300 << 20, 3 << 40):
+        monkeypatch.setattr(prof, "scan_bytes", lambda df, n=nbytes: n)
+        assert prof.scan_partitions(None) == max(32, min(4096, nbytes // (8 << 20)))
+        assert prof.scan_partitions(None, text=True) == max(
+            32, min(4096, nbytes // (256 << 10))
         )
-        assert p.partitions(scan_bytes, text=True) == max(
-            32, min(4096, scan_bytes // (256 << 10))
-        )
 
 
-def test_env_overrides_apply(monkeypatch):
-    import near_real_time_data_warehouse_spark.profile as prof
-
-    monkeypatch.setattr(prof, "_ACTIVE", None)
-    monkeypatch.setenv("SPARK_GRAFT_KNEE_BYTES_PER_TASK", str(1 << 20))
-    monkeypatch.setenv("SPARK_GRAFT_KNEE_MIN_PARTITIONS", "200")
-    monkeypatch.setenv("SPARK_GRAFT_KNEE_MAX_PARTITIONS", "100000")
-    p = prof.knee_profile()
-    assert p.partitions(50 << 20) == 200  # floor raised
-    assert p.partitions(1 << 40) == 100000  # cap raised
-    assert p.partitions(400 << 20) == 400  # 1 MB/task rate
-    monkeypatch.setattr(prof, "_ACTIVE", None)
-
-
-def test_active_profile_is_default_here():
-    # this container sets no overrides; knee sites must see the tuned
-    # single-host defaults (the plans-byte-for-byte guarantee)
-    assert knee_profile() == KneeProfile()
+def test_persisted_frame_keeps_its_scan_size(spark, tmp_path):
+    """The size recorded before the persist wins over the files: here they
+    are gone once the cache holds the rows."""
+    path = tmp_path / "t"
+    spark.range(1000).write.parquet(str(path))
+    df = spark.read.parquet(str(path))
+    nbytes = prof.scan_bytes(df)
+    assert nbytes > 0
+    p = prof.persist_sized(df)
+    try:
+        assert p.count() == 1000
+        shutil.rmtree(path)
+        assert prof.scan_bytes(spark.range(3)) == 0
+        assert prof.scan_bytes(p) == nbytes
+    finally:
+        p.unpersist()

@@ -211,15 +211,18 @@ def test_sem_planes_depth_formula():
     from near_real_time_data_warehouse_spark.operators.similarity import (
         SEM_PLANES,
         SEM_TARGET_N,
-        _sem_planes,
+        _plane_depth,
     )
 
-    assert _sem_planes(1) == SEM_PLANES
-    assert _sem_planes(SEM_TARGET_N) == SEM_PLANES
-    assert _sem_planes(SEM_TARGET_N + 1) == SEM_PLANES + 1
-    assert _sem_planes(2 * SEM_TARGET_N) == SEM_PLANES + 1
-    assert _sem_planes(4 * SEM_TARGET_N) == SEM_PLANES + 2
-    assert _sem_planes(50 * SEM_TARGET_N) == SEM_PLANES + 6
+    def depth(n: int) -> int:
+        return _plane_depth(n, SEM_PLANES, SEM_TARGET_N)
+
+    assert depth(1) == SEM_PLANES
+    assert depth(SEM_TARGET_N) == SEM_PLANES
+    assert depth(SEM_TARGET_N + 1) == SEM_PLANES + 1
+    assert depth(2 * SEM_TARGET_N) == SEM_PLANES + 1
+    assert depth(4 * SEM_TARGET_N) == SEM_PLANES + 2
+    assert depth(50 * SEM_TARGET_N) == SEM_PLANES + 6
 
 
 def test_deeper_planes_candidates_are_a_subset(spark):
@@ -270,10 +273,13 @@ def test_ann_planes_formula_and_probe_containment(spark):
 
     from near_real_time_data_warehouse_spark.operators import similarity as S
 
-    assert S._ann_planes(1) == S.N_PLANES
-    assert S._ann_planes(S.ANN_TARGET_N) == S.N_PLANES
-    assert S._ann_planes(2 * S.ANN_TARGET_N) == S.N_PLANES + 1
-    assert S._ann_planes(300 * S.ANN_TARGET_N) == S.N_PLANES + 9
+    def depth(n: int) -> int:
+        return S._plane_depth(n, S.N_PLANES, S.ANN_TARGET_N)
+
+    assert depth(1) == S.N_PLANES
+    assert depth(S.ANN_TARGET_N) == S.N_PLANES
+    assert depth(2 * S.ANN_TARGET_N) == S.N_PLANES + 1
+    assert depth(300 * S.ANN_TARGET_N) == S.N_PLANES + 9
 
     from .conftest import SF_SMALL
 
@@ -1099,7 +1105,7 @@ def test_lsh_emit_once_candidates_match_distinct(spark):
 
     sf = SF_SMALL
     emb = sm._emb(spark, sf)
-    n_planes = sm._ann_planes(sm._emb_count(spark, sf))
+    n_planes = sm._plane_depth(sm._emb_count(spark, sf), sm.N_PLANES, sm.ANN_TARGET_N)
     corpus = sm._bucketed(emb, n_planes=n_planes, carry_all=True).localCheckpoint()
     qb = sm._bucketed(
         emb.filter(F.col("vec_id") < sm.QUERY_CAP), n_planes=n_planes, carry_all=True
